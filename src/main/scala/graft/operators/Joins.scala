@@ -162,8 +162,11 @@ object Joins {
       .agg(
         count(lit(1)).as("cnt"),
         countDistinct(col("s_suppkey")).as("n_supp"),
-        round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
-          .as("revenue"),
+        // exact: cents × (100 − discount basis points) summed as BIGINT
+        // micro-units, rounded half-up to cents, one division to a double
+        expr("""(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
+               |   * (100 - CAST(round(l_discount * 100) AS BIGINT))) + 50)
+               | DIV 100 / 100""".stripMargin).as("revenue"),
         round(min(col("s_acctbal")), 2).as("min_bal"))
       .orderBy(col("n_name").asc)
   }
@@ -516,7 +519,9 @@ object Joins {
     "q_join_supplier" ->
       """SELECT n_name, count(*) AS cnt,
         |       count(DISTINCT s_suppkey) AS n_supp,
-        |       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+        |       CAST((CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
+        |         * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS BIGINT)
+        |         + 50) // 100 AS DOUBLE) / 100 AS revenue,
         |       round(min(s_acctbal), 2) AS min_bal
         |FROM lineitem
         |JOIN supplier ON l_suppkey = s_suppkey

@@ -314,19 +314,21 @@ object Relational {
     * in place twice (TESTDATA.md), and a path-only key would keep
     * serving the STALE layout copy after a regeneration — an oracle
     * mismatch with no visible cause. A fingerprint change simply
-    * derives a fresh dir and rebuilds (the stale copy is a few MB of
-    * /tmp). The key is md5'd to a fixed-length token: a DIRECTORY
-    * table's fingerprint concatenates every part file's
-    * (name, mtime, len), and on the multi-part scale replicas the raw
-    * string blew past the filesystem's 255-byte filename limit
-    * (measured: Mkdirs failure on the 10× replica's customer copy). */
+    * derives a fresh dir and rebuilds (the stale copy is a few MB under
+    * `java.io.tmpdir`, where every copy lives). The key is md5'd to a
+    * fixed-length token: a DIRECTORY table's fingerprint concatenates
+    * every part file's (name, mtime, len), and on the multi-part scale
+    * replicas the raw string blew past the filesystem's 255-byte
+    * filename limit (measured: Mkdirs failure on the 10× replica's
+    * customer copy). */
   private[graft] def layoutDir(s: SparkSession, d: String, table: String,
       prefix: String): String = {
     val key = d + "/" + table + "@" +
       graft.Tables.pathFingerprint(s, s"$d/$table.parquet")
     val md = java.security.MessageDigest.getInstance("MD5")
-    s"/tmp/graft_${prefix}_" +
-      md.digest(key.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+    val token = md.digest(key.getBytes("UTF-8")).map(b => f"$b%02x").mkString
+    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+      s"graft_${prefix}_$token").toString
   }
 
   def srcPartitioned(s: SparkSession, d: String): DataFrame = {

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
 /** The reference's three entry points end-to-end on Spark (SURVEY §3.1):
   * audit (develop cleaning rules) → process_map (ETL to the star) →
   * report (analytics over the star). Semantics per the Udacity template
@@ -30,7 +32,11 @@ object OsmPipeline {
 
   /** process_map analog: XML → audited/cleaned 5-table star → columnar
     * files. `format` mirrors the reference's CSV export; parquet is the
-    * engine-native sink. */
+    * engine-native sink. The five tables are written concurrently, one
+    * thread each, so the cores one table's write leaves idle serve the
+    * others. Every write has finished when this returns or throws; if any
+    * failed, the first failure's own error (not its executor wrapper) is
+    * rethrown. */
   def processMap(spark: SparkSession, xmlPath: String, outDir: String,
       format: String = "parquet",
       mapping: Map[String, String] = OsmXml.DefaultMapping): Map[String, DataFrame] = {
@@ -38,13 +44,25 @@ object OsmPipeline {
     val cleaned = star ++ Seq(
       "nodes_tags" -> OsmXml.cleanTags(star("nodes_tags"), mapping),
       "ways_tags"  -> OsmXml.cleanTags(star("ways_tags"), mapping))
-    cleaned.foreach { case (name, df) =>
-      val w = df.write.mode("overwrite")
-      format match {
-        case "csv" => w.option("header", "true").csv(s"$outDir/$name")
-        case _     => w.parquet(s"$outDir/$name")
+    val pool = Executors.newFixedThreadPool(cleaned.size)
+    try {
+      val writes = cleaned.toSeq.map { case (name, df) =>
+        pool.submit(new Callable[Unit] {
+          def call(): Unit = {
+            val w = df.write.mode("overwrite")
+            format match {
+              case "csv" => w.option("header", "true").csv(s"$outDir/$name")
+              case _     => w.parquet(s"$outDir/$name")
+            }
+          }
+        })
       }
-    }
+      val failures = writes.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach(e => throw e)
+    } finally pool.shutdown()
     cleaned
   }
 
@@ -64,22 +82,13 @@ object OsmPipeline {
     * head() here silently censused only the first file (caught by the
     * multi-file golden in OsmLargeSpec). */
   def tagCensus(spark: SparkSession, xmlPath: String): Map[String, Long] = {
-    val doc = spark.read.format("xml").option("rowTag", "osm").load(xmlPath)
-    // XML inference yields an array for repeated children but a bare
-    // struct for a single occurrence — and omits absent elements.
-    def cnt(name: String) =
-      if (!doc.schema.fieldNames.contains(name)) lit(0L)
-      else doc.schema(name).dataType match {
-        case _: org.apache.spark.sql.types.ArrayType =>
-          coalesce(size(col(name)).cast("long"), lit(0L))
-        case _ => when(col(name).isNotNull, 1L).otherwise(0L)
-      }
-    val row = doc.select(cnt("node").as("node"), cnt("way").as("way"),
-      cnt("relation").as("relation"))
-      .agg(sum(col("node")).as("node"), sum(col("way")).as("way"),
-        sum(col("relation")).as("relation"))
+    val names = Seq("node", "way", "relation")
+    // a child type the document lacks reads as a null array
+    val row = OsmXml.read(spark, "osm", xmlPath)
+      .select(names.map(n =>
+        sum(when(col(n).isNull, 0L).otherwise(size(col(n)))).as(n)): _*)
       .head()
-    Seq("node", "way", "relation").map(n => n -> row.getAs[Long](n)).toMap
+    names.map(n => n -> row.getAs[Long](n)).toMap
   }
 
   /** users.py analog: count of distinct contributors across both element

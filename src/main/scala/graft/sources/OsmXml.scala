@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** OSM-XML → relational star flattener: the reference pipeline's core ETL
@@ -19,6 +19,16 @@ import org.apache.spark.sql.functions._
   *  - way→nd refs keep document order, materialized as `position`;
   *  - <relation> elements are skipped entirely (rowTag selection).
   *
+  * Schema: every reader goes through `read`, which hands the XML source a
+  * fixed `StructType` per element (the reference's `schema.py`); the
+  * schema is never inferred. So building a reader runs no Spark job, a
+  * tag value such as "007" stays a string, and an element with one child
+  * `<tag>`, or an extract with no tagged element at all, still reads
+  * `tag` as an array. `timestamp` is read as `TimestampType` and rendered
+  * as a string in the session time zone (`2019-10-16T21:18:25Z` becomes
+  * `2019-10-16 21:18:25` under UTC); `version` is read as a long and
+  * rendered as a string.
+  *
   * Scale: the XML source splits files across tasks and each element
   * flattens independently — the same streaming-ETL shape as iterparse,
   * but partition-parallel.
@@ -30,6 +40,35 @@ object OsmXml {
   /** Street-type correction dictionary (audit.py `update_name` analog). */
   val DefaultMapping: Map[String, String] = Map(
     "St" -> "Street", "St." -> "Street", "Ave" -> "Avenue", "Rd" -> "Road")
+
+  private val Header = "_id BIGINT, _user STRING, _uid BIGINT, _version BIGINT, " +
+    "_changeset BIGINT, _timestamp TIMESTAMP"
+  private val Tags = "tag ARRAY<STRUCT<_k: STRING, _v: STRING>>"
+
+  /** The read schema of each row tag, as DDL. `osm` reads a whole
+    * document as one row, for the element census. */
+  private val Schemas: Map[String, String] = Map(
+    "node"     -> s"$Header, _lat DOUBLE, _lon DOUBLE, $Tags",
+    "way"      -> s"$Header, nd ARRAY<STRUCT<_ref: BIGINT>>, $Tags",
+    "relation" -> (s"$Header, member ARRAY<STRUCT<_type: STRING, _ref: BIGINT, " +
+      s"_role: STRING>>, $Tags"),
+    "osm"      -> Seq("node", "way", "relation")
+      .map(e => s"$e ARRAY<STRUCT<_id: BIGINT>>").mkString(", "))
+
+  /** The one XML reader: the `rowTag` elements of `path` under their fixed
+    * schema. Building it runs no Spark job. */
+  def read(spark: SparkSession, rowTag: String, path: String): DataFrame =
+    spark.read.format("xml").schema(Schemas(rowTag))
+      .option("rowTag", rowTag).load(path)
+
+  /** The attributes every element type carries, as star columns. */
+  private val header: Seq[Column] = Seq(
+    col("_id").as("id"),
+    col("_user").as("user"),
+    col("_uid").as("uid"),
+    col("_version").cast("string").as("version"),
+    col("_changeset").as("changeset"),
+    col("_timestamp").cast("string").as("timestamp"))
 
   private def splitTags(df: DataFrame): DataFrame =
     df.select(col("_id").as("id"), explode(col("tag")).as("t"))
@@ -45,64 +84,37 @@ object OsmXml {
       .select(col("id"), col("key"), col("value"), col("type"))
 
   def nodes(spark: SparkSession, path: String): DataFrame =
-    spark.read.format("xml").option("rowTag", "node").load(path)
-      .select(
-        col("_id").cast("long").as("id"),
-        col("_lat").cast("double").as("lat"),
-        col("_lon").cast("double").as("lon"),
-        col("_user").as("user"),
-        col("_uid").cast("long").as("uid"),
-        col("_version").cast("string").as("version"),
-        col("_changeset").cast("long").as("changeset"),
-        col("_timestamp").cast("string").as("timestamp"))
+    read(spark, "node", path).select(
+      (Seq(col("_id").as("id"), col("_lat").as("lat"), col("_lon").as("lon")) ++
+        header.tail): _*)
 
   def nodesTags(spark: SparkSession, path: String): DataFrame =
-    splitTags(spark.read.format("xml").option("rowTag", "node").load(path)
-      .filter(col("tag").isNotNull))
+    splitTags(read(spark, "node", path))
 
   def ways(spark: SparkSession, path: String): DataFrame =
-    spark.read.format("xml").option("rowTag", "way").load(path)
-      .select(
-        col("_id").cast("long").as("id"),
-        col("_user").as("user"),
-        col("_uid").cast("long").as("uid"),
-        col("_version").cast("string").as("version"),
-        col("_changeset").cast("long").as("changeset"),
-        col("_timestamp").cast("string").as("timestamp"))
+    read(spark, "way", path).select(header: _*)
 
   def waysTags(spark: SparkSession, path: String): DataFrame =
-    splitTags(spark.read.format("xml").option("rowTag", "way").load(path)
-      .filter(col("tag").isNotNull))
+    splitTags(read(spark, "way", path))
 
   def waysNodes(spark: SparkSession, path: String): DataFrame =
-    spark.read.format("xml").option("rowTag", "way").load(path)
-      .select(col("_id").cast("long").as("id"),
-        posexplode(col("nd")).as(Seq("position", "nd")))
-      .select(col("id"), col("nd._ref").cast("long").as("node_id"),
-        col("position").cast("int").as("position"))
+    read(spark, "way", path)
+      .select(col("_id").as("id"), posexplode(col("nd")).as(Seq("position", "nd")))
+      .select(col("id"), col("nd._ref").as("node_id"), col("position"))
 
   /** <relation> header attributes — the element type the 5-table star
     * deliberately skips (reference contract); exposed as its own reader
     * so multipolygon/route consumers aren't forced back to raw XML. */
   def relations(spark: SparkSession, path: String): DataFrame =
-    spark.read.format("xml").option("rowTag", "relation").load(path)
-      .select(
-        col("_id").cast("long").as("id"),
-        col("_user").as("user"),
-        col("_uid").cast("long").as("uid"),
-        col("_version").cast("string").as("version"),
-        col("_changeset").cast("long").as("changeset"),
-        col("_timestamp").cast("string").as("timestamp"))
+    read(spark, "relation", path).select(header: _*)
 
   /** relation→member list in document order (type/ref/role + position) —
     * the ways_nodes analog for relations. */
   def relationsMembers(spark: SparkSession, path: String): DataFrame =
-    spark.read.format("xml").option("rowTag", "relation").load(path)
-      .select(col("_id").cast("long").as("id"),
-        posexplode(col("member")).as(Seq("position", "m")))
+    read(spark, "relation", path)
+      .select(col("_id").as("id"), posexplode(col("member")).as(Seq("position", "m")))
       .select(col("id"), col("m._type").as("member_type"),
-        col("m._ref").cast("long").as("ref"), col("m._role").as("role"),
-        col("position").cast("int").as("position"))
+        col("m._ref").as("ref"), col("m._role").as("role"), col("position"))
 
   /** The full star in one call. */
   def loadStar(spark: SparkSession, path: String): Map[String, DataFrame] = Map(

@@ -64,8 +64,8 @@ class OsmVolumeSpec extends SparkSpec {
         sb ++= s"""  <way id="${10000 + w}" user="wuser${w % WayUsers}" uid="${1000 + w % WayUsers}" version="1" changeset="${2000 + w}" timestamp="2015-02-01T00:00:00Z">\n"""
         for (p <- 0 until 5)
           sb ++= s"""    <nd ref="${(w * 5 + p) % NodesN + 1}"/>\n"""
-        // two tags so XML schema inference types `tag` as ARRAY (a
-        // single-tag element would infer STRUCT and break the splitter)
+        // two tags on every way; `tag` reads as an array under the fixed
+        // schema whatever the count (OsmSchemaSpec covers one-tag ways)
         sb ++= "    <tag k=\"highway\" v=\"residential\"/>\n"
         sb ++= s"""    <tag k="name" v="Route $w"/>\n"""
         sb ++= "  </way>\n"
