@@ -610,10 +610,10 @@ object LgMicro {
   * i+2, size(ps)), y -> ...)))` re-enters the interpreted higher-order
   * evaluator per element and allocates a slice + result array per outer
   * index; the co-purchase pair explode runs it over every order of the
-  * fact table (CcDerivProbe measured the explode stage at ~7.6 s of the
-  * 100× derivation). Packing is lossless for keys in [0, 2³¹) — the
-  * same domain contract orderParts enforces via the footer-stat guard.
-  * Output element order matches the SQL form (outer index ascending,
+  * fact table (the explode stage measured ~7.6 s of the 100× derivation;
+  * BASELINE.md round 16, "supportedPairs derivation"). Packing is
+  * lossless for keys in [0, 2³¹) — the same domain contract orderParts
+  * enforces via the footer-stat guard. Output element order matches the SQL form (outer index ascending,
   * inner ascending), so even order-sensitive consumers are identical. */
 case class PackedPairs(child: Expression) extends UnaryExpression {
 

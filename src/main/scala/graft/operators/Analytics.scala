@@ -495,8 +495,9 @@ object Analytics {
     * 100× A/B (TimeOne warm min, BASELINE.md round 12): q_basket_pairs
     * 40.8 → 21.8 s, q_basket_lift 58.5 → 25.1 s; sf0.1 unchanged. */
   private[operators] def orderPairs(s: SparkSession, d: String): DataFrame = {
-    // Round 16 (VERDICT r15 item 7; CcDerivProbe decomposition — the
-    // explode stage was ~7.6 s of the ~24 s 100× derivation): the pair
+    // Round 16 (VERDICT r15 item 7; noop-sink stage decomposition in
+    // BASELINE.md round 16 "supportedPairs derivation" — the explode
+    // stage was ~7.6 s of the ~24 s 100× derivation): the pair
     // generation is the codegen'd [[graft.functions.PackedPairs]] loop
     // instead of the nested-transform SQL, which re-entered the
     // interpreted higher-order evaluator and allocated a slice + result
@@ -525,7 +526,7 @@ object Analytics {
   private[graft] def pairSupport(s: SparkSession, d: String): DataFrame =
     orderPairs(s, d).groupBy(col("pk")).agg(count(lit(1)).as("sup"))
 
-  /** Session-scoped memo for the SUPPORT-≥2 co-purchase pair leaf —
+  /** The session-scoped SUPPORT-≥2 co-purchase pair leaf —
     * the `(pk, sup)` survivor set that FOUR declared queries derive
     * identically and, until round 15, each re-derived from scratch
     * (the derivation — pair explode + support groupBy — is each one's
@@ -535,38 +536,33 @@ object Analytics {
     * checkpointed — it is dim²-bounded (support ≥ 2 collapses the pair
     * stream to the co-purchase survivor set), so the cache write is
     * noise where a full-support checkpoint was a measured 45 s/100×
-    * tax (see [[pairSupport]]). Same discipline as Dedup.labelMemo:
-    * keyed on `<scId>:<dir>@<lineitem fingerprint>`, stale siblings
+    * tax (see [[pairSupport]]). Same discipline as the dedup label
+    * leaf: a [[Hints.leaf]] fingerprinted on `lineitem`, stale siblings
     * evicted on insert, dropped wholesale by measurement harnesses via
     * Hints.evictAllMemos. Accounting mirrors the dedup convention:
     * q_graph_cc — the family's heaviest consumer — always REBUILDS and
-    * refreshes the memo (its bench time keeps measuring the full
+    * refreshes the leaf (its bench time keeps measuring the full
     * derivation honestly); kcore and lift consume the shared leaf.
     * Measured solo at 100× (TimeOne, BASELINE.md round 15): warm
     * consumers drop to their own round cost — kcore 37.7 → ~5.6 s,
     * cc rounds ~10 s — while cold cost is unchanged from r14 (the
     * eager survivor-set checkpoint existed there per query). */
-  private val supportedPairsMemo = Hints.registerMemo(
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-
-  private def supportedPairsKey(s: SparkSession, d: String): String =
-    System.identityHashCode(s.sparkContext) + ":" + d + "@" +
-      Tables.pathFingerprint(s, s"$d/lineitem.parquet")
+  private def supportedPairsKey(s: SparkSession, d: String): Hints.LeafKey =
+    Hints.leafKey(s, d, "supported-pairs", "lineitem")
 
   private def buildSupportedPairs(s: SparkSession, d: String): DataFrame =
     Hints.checkpoint(pairSupport(s, d).filter(col("sup") >= 2),
       eager = true)
 
   private[graft] def supportedPairs(s: SparkSession, d: String): DataFrame =
-    Hints.memoInsert(supportedPairsMemo, supportedPairsKey(s, d),
-      buildSupportedPairs(s, d))
+    Hints.leaf(supportedPairsKey(s, d))(buildSupportedPairs(s, d))
 
-  /** q_graph_cc's rebuild-always entry: refresh the memo so later
-    * consumers in the same session reuse the fresh leaf (memoPut
-    * unpersists the displaced entry — no block leak). */
+  /** q_graph_cc's rebuild-always entry: refresh the leaf so later
+    * consumers in the same session reuse it (replaceLeaf unpersists the
+    * displaced entry — no block leak). */
   private[graft] def rebuildSupportedPairs(s: SparkSession, d: String): DataFrame = {
     val leaf = buildSupportedPairs(s, d)
-    Hints.memoPut(supportedPairsMemo, supportedPairsKey(s, d), leaf)
+    Hints.replaceLeaf(supportedPairsKey(s, d), leaf)
     leaf
   }
 

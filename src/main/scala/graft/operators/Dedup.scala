@@ -171,9 +171,9 @@ object Dedup {
     * is no exchange for AQE stage-reuse to share), and the join keys'
     * inferred IsNotNull pushed a second full signature evaluation into
     * the scan filter. The declared twins persist this frame once per
-    * construction (memoPut — rebuilt every construction, superseded
-    * entry unpersisted) and feed BOTH candidate legs and both verify
-    * legs from it; property tests keep the stateless plan. Bulk is
+    * construction (Hints.replaceLeaf — rebuilt every construction,
+    * superseded entry unpersisted) and feed BOTH candidate legs and both
+    * verify legs from it; property tests keep the stateless plan. Bulk is
     * bounded: the audit guard caps the input at ≈[[AuditCap]] rows. */
   private[operators] def lshAuditFrame(docs: DataFrame, blockCols: Seq[String],
       nGram: Int, numPerms: Int): DataFrame = {
@@ -247,22 +247,21 @@ object Dedup {
   def dedupJaccardLsh(s: SparkSession, d: String): DataFrame =
     dedupJaccardLshOn(auditSample(Tables.documents(s, d),
       Tables.rowCount(s, d, "documents"), "doc_id"),
-      Some(System.identityHashCode(s.sparkContext) + ":" + d +
-        ":jlsh-frame@" + Tables.pathFingerprint(s, s"$d/documents.parquet")))
+      Some(Hints.leafKey(s, d, "jlsh-frame", "documents")))
 
   /** The 1-gram verify set IS the banded shingle set (shingles(1) =
     * array_distinct(toks)), so both verify legs read the same persisted
     * frame the candidate legs band over — one signature+shingle pass per
     * construction instead of four (two candidate legs, two verify legs). */
   def dedupJaccardLshOn(docs: DataFrame,
-      frameLeafKey: Option[String] = None): DataFrame = {
+      frameLeafKey: Option[Hints.LeafKey] = None): DataFrame = {
     val frame0 = lshAuditFrame(docs, Seq("lang", "source"),
       nGram = 1, numPerms = 32)
     val frame = frameLeafKey match {
       case Some(k) =>
         val p = frame0.persist(
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        Hints.memoPut(sweepSigMemo, k, p)
+        Hints.replaceLeaf(k, p)
         p
       case None => frame0
     }
@@ -296,18 +295,17 @@ object Dedup {
   def dedupContainLsh(s: SparkSession, d: String): DataFrame =
     dedupContainLshOn(auditSample(Tables.documents(s, d),
       Tables.rowCount(s, d, "documents"), "doc_id"),
-      Some(System.identityHashCode(s.sparkContext) + ":" + d +
-        ":clsh-frame@" + Tables.pathFingerprint(s, s"$d/documents.parquet")))
+      Some(Hints.leafKey(s, d, "clsh-frame", "documents")))
 
   def dedupContainLshOn(docs: DataFrame,
-      frameLeafKey: Option[String] = None): DataFrame = {
+      frameLeafKey: Option[Hints.LeafKey] = None): DataFrame = {
     val frame0 = lshAuditFrame(docs, Seq("lang", "source"),
       nGram = 1, numPerms = 64)
     val frame = frameLeafKey match {
       case Some(k) =>
         val p = frame0.persist(
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        Hints.memoPut(sweepSigMemo, k, p)
+        Hints.replaceLeaf(k, p)
         p
       case None => frame0
     }
@@ -442,7 +440,7 @@ object Dedup {
     * on this corpus it cuts 276k candidates to ~2k. */
   def minhashCandidates(docs: DataFrame, nGram: Int = 2,
       numPerms: Int = NumPerms, bandRows: Int = BandRows,
-      estMin: Double = 0.0, sigLeafKey: Option[String] = None): DataFrame = {
+      estMin: Double = 0.0): DataFrame = {
     // Pair generation is a STREAMED self-join on the bucket key, not a
     // collect-ids-then-expand aggregation: a mass-duplicate hot bucket
     // (boilerplate duplicated 10^6× — the core dedup scenario) makes a
@@ -455,23 +453,8 @@ object Dedup {
     // additional properties the aggregation variants lack: no single
     // giant row can defeat executor memory, and the join parallelizes a
     // hot bucket's pair emission across its matching row groups.
-    // Round 16 (VERDICT r15 item 4): fixture-backed callers persist the
-    // per-doc SIGNATURE table so the two self-join legs (which the final
-    // plans showed each recomputing the full shingle+minhash map — the
-    // join goes broadcast at fixture scale, so AQE stage reuse never
-    // fires) share one signature pass; the banded explode re-runs per
-    // leg as a narrow map over the cache. memoPut discipline: rebuilt
-    // every construction (honest bench), displaced entry unpersisted.
-    val sigs0 = minhashSignatures(docs, nGram, numPerms)
-    val sigs = sigLeafKey match {
-      case Some(k) =>
-        val p = sigs0.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        Hints.memoPut(sweepSigMemo, k, p)
-        p
-      case None => sigs0
-    }
-    val bkt = bucketsFromSigs(sigs, numPerms, bandRows)
+    val bkt = bucketsFromSigs(minhashSignatures(docs, nGram, numPerms),
+      numPerms, bandRows)
     // Alias self-join (not two renamed projections): keeping both legs
     // structurally identical lets the ordering predicate ride INSIDE the
     // join and measured ~25% faster at sf0.1 than the projection-renamed
@@ -492,6 +475,25 @@ object Dedup {
       .distinct()
   }
 
+  /** Corpus size below which the verify leaf is NOT worth its cache
+    * write — footer-count-conditional, the adaptive-width discipline
+    * (annWidth/kgExtraWidth). Three measured anchors, same session:
+    * 5k docs (sf0.1) the leaf LOSES — persisting the shingle arrays
+    * costs more than the second derivation leg (bench 1.08 → 2.31 s, a
+    * measured gate trip, reverted); 50k docs (10×) a wash (7.40 leafed
+    * vs 7.19 stateless solo); 500k docs (100×) the leaf WINS 35.5 →
+    * 24.7 s (clusters 39.2 → 26.3 s). Boundary at the first decade
+    * above the measured wash. */
+  private[graft] val SetsLeafMinDocs = 100000L
+
+  /** Registry key of the (doc_id, tset) verify leaf of gram width
+    * `nGram`, or None below [[SetsLeafMinDocs]]. */
+  private def setsKeyIfBig(s: SparkSession, d: String,
+      nGram: Int): Option[Hints.LeafKey] =
+    if (Tables.rowCount(s, d, "documents") >= SetsLeafMinDocs)
+      Some(Hints.leafKey(s, d, s"ndp-sets#g$nGram", "documents"))
+    else None
+
   /** The production near-dup pipeline at corpus scale: LSH candidate
     * generation (near-linear) followed by exact Jaccard verification on
     * the candidates only — never an all-pairs join. The (lang, source)
@@ -506,49 +508,20 @@ object Dedup {
     * On a natural (Zipfian, large-vocab) corpus wider bands (4 rows)
     * would cut false candidates; this synthetic corpus has high
     * background similarity, so recall gets the budget instead. */
-  /** Shared-leaf memo for the verify-stage shingle sets (see
-    * [[nearDupPairs]]'s setsLeafKey). */
-  private val setsMemo = Hints.registerMemo(
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-
-  /** Memo key for the (doc_id, tset) verify leaf — evictStale format:
-    * variant tag (incl. gram width) before the '@', fingerprint after. */
-  private def setsKey(s: SparkSession, d: String, nGram: Int): String =
-    System.identityHashCode(s.sparkContext) + ":" + d +
-      s":ndp-sets#g$nGram@" +
-      Tables.pathFingerprint(s, s"$d/documents.parquet")
-
-  /** Corpus size below which the verify leaf is NOT worth its cache
-    * write — footer-count-conditional, the adaptive-width discipline
-    * (annWidth/kgExtraWidth). Three measured anchors, same session:
-    * 5k docs (sf0.1) the leaf LOSES — persisting the shingle arrays
-    * costs more than the second derivation leg (bench 1.08 → 2.31 s, a
-    * measured gate trip, reverted); 50k docs (10×) a wash (7.40 leafed
-    * vs 7.19 stateless solo); 500k docs (100×) the leaf WINS 35.5 →
-    * 24.7 s (clusters 39.2 → 26.3 s). Boundary at the first decade
-    * above the measured wash. */
-  private[graft] val SetsLeafMinDocs = 100000L
-
-  private def setsKeyIfBig(s: SparkSession, d: String,
-      nGram: Int): Option[String] =
-    if (Tables.rowCount(s, d, "documents") >= SetsLeafMinDocs)
-      Some(setsKey(s, d, nGram))
-    else None
-
   def nearDupPairs(docs: DataFrame, nGram: Int = 2, threshold: Double = 0.7,
       numPerms: Int = 32, bandRows: Int = 2,
-      setsLeafKey: Option[String] = None,
-      sigLeafKey: Option[String] = None): DataFrame = {
+      setsLeafKey: Option[Hints.LeafKey] = None): DataFrame = {
     // The verify stage references the (doc_id, tset) stream TWICE (a/b
     // legs below are different projections, so exchange reuse never
     // fires) — without a leaf the tokenize+shingle+distinct derivation
     // runs once per leg, corpus-linear each time. Fixture-backed callers
-    // pass setsLeafKey (memoPut: rebuilt per construction — honest
-    // bench — displaced entry unpersisted, swept by evictAllMemos);
+    // pass setsLeafKey (Hints.replaceLeaf: rebuilt per construction —
+    // honest bench — displaced entry unpersisted, swept by
+    // evictAllMemos);
     // ad-hoc callers (property tests on synthetic frames) omit it and
     // keep the stateless plan. Measured solo at 100×, same session
-    // (memoPut semantics — every rep pays ONE derivation + the cache
-    // write): q_dedup_neardup 35.5 → 24.7 s, q_dedup_clusters 39.2 →
+    // (rebuild-always semantics — every rep pays ONE derivation + the
+    // cache write): q_dedup_neardup 35.5 → 24.7 s, q_dedup_clusters 39.2 →
     // 26.3 s, q_graph_cc unchanged (35.2 → 34.2 s — its edges are
     // co-purchase pairs, no shingle verify). An unmanaged inline
     // persist measured 11.4 s but that is the WARM-rep artifact of
@@ -560,7 +533,7 @@ object Dedup {
       case Some(k) =>
         val p = sets0.persist(
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        Hints.memoPut(setsMemo, k, p)
+        Hints.replaceLeaf(k, p)
         p
       case None => sets0
     }
@@ -573,7 +546,7 @@ object Dedup {
     // threshold/2 keeps the miss probability negligible at every setting
     // (the estimate must fall below half the true similarity).
     minhashCandidates(docs, nGram, numPerms, bandRows,
-        estMin = math.min(0.25, threshold / 2), sigLeafKey = sigLeafKey)
+        estMin = math.min(0.25, threshold / 2))
       .join(a, "a_id").join(b, "b_id")
       .withColumn("inter", size(array_intersect(col("ta"), col("tb"))).cast("long"))
       .withColumn("uni",
@@ -595,19 +568,20 @@ object Dedup {
     * share >70% of the vocabulary — the "similar" pair space itself is
     * quadratic). Bigrams are discriminative, so true near-dup pairs stay
     * near-linear in corpus size. */
-  /** The signature-leaf variant (nearDupPairs' sigLeafKey) is a MEASURED
-    * REJECTION for this family at both scales (round 16, LeafShapeProbe
-    * same-JVM interleaved A/Bs): at 5k docs the persist LOSES outright
-    * (warm-min 2.65 stateless vs 4.14 s leafed — cache write + columnar
-    * read barrier vs one cheap minhash pass), and at the 100× replica,
-    * ON TOP of the r15 verify-set leaf, it is a wash-to-loss (5-rep
-    * 3-way: stateless 40.2 / sets-leaf 27.5 / sets+sigs 28.2 s at min,
-    * medians 29.6 vs 32.4) — the candidate join's signature legs
+  /** A signature leaf (persisting the per-doc minhash table the
+    * candidate join's two legs read) is a MEASURED REJECTION for this
+    * family at both scales (same-JVM interleaved A/Bs, BASELINE.md round
+    * 16 "posting/feature/signature leaf candidates"): at 5k docs the
+    * persist LOSES outright (warm-min 2.65 stateless vs 4.14 s leafed —
+    * cache write + columnar read barrier vs one cheap minhash pass), and
+    * at the 100× replica, ON TOP of the r15 verify-set leaf, it is a
+    * wash-to-loss (5-rep 3-way: stateless 40.2 / sets-leaf 27.5 /
+    * sets+sigs 28.2 s at min, medians 29.6 vs 32.4) — the candidate
+    * join's signature legs
     * overlap the verify legs' work, so there is no second corpus pass
-    * left to save. The mechanism stays (sigLeafKey, exercised by the
-    * probe; q_dedup_incr uses the same persist shape internally where
-    * it DOES pay — its corpus side is referenced by both the bucket
-    * join and nothing else recomputes it). */
+    * left to save. q_dedup_incr uses the same persist shape where it
+    * DOES pay — its corpus side is referenced by both the bucket join
+    * and nothing else recomputes it. */
   def dedupNeardup(s: SparkSession, d: String): DataFrame =
     nearDupPairs(Tables.documents(s, d),
         setsLeafKey = setsKeyIfBig(s, d, 2))
@@ -632,7 +606,7 @@ object Dedup {
     // ways (doc_id%10 = vs ≠ 7) — distinct subtrees, so exchange reuse
     // never fires and the corpus-linear signature map ran once PER
     // SIDE. Same single-consumer-leaf treatment as [[dedupLshSweep]]
-    // (memoPut: rebuilt each construction, displaced entry
+    // (Hints.replaceLeaf: rebuilt each construction, displaced entry
     // unpersisted). Measured at 100× (same-session solo A/B):
     // 41.3 → 33.0 s (14.8× → 11.0×); sf0.1 TimeOne min 2.25 → 2.51 s
     // (+0.26 s cache write at the scale where one signature pass is
@@ -643,16 +617,9 @@ object Dedup {
     // (16 copies per doc), so the old bkt persist cached 16× the bytes
     // for the same saved signature computation; the banded explode
     // re-runs over the cache as a narrow map per consumer side.
-    // Variant tag BEFORE the '@': Hints.evictStale treats everything
-    // after the last '@' as the fingerprint, so a tag appended AFTER it
-    // would make the two sweepSigMemo variants cross-evict each other's
-    // still-current leaf (same prefix, "different fingerprint").
     val sigs = minhashSignatures(docs, 2, 32)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    Hints.memoPut(sweepSigMemo,
-      System.identityHashCode(s.sparkContext) + ":" + d + ":incr-sigs@" +
-        Tables.pathFingerprint(s, s"$d/documents.parquet"),
-      sigs)
+    Hints.replaceLeaf(Hints.leafKey(s, d, "incr-sigs", "documents"), sigs)
     val bkt = bucketsFromSigs(sigs, 32, 2)
     val n = bkt.filter(col("doc_id") % 10 === 7)
       .select(col("doc_id").as("new_id"), col("sig").as("nsig"),
@@ -669,7 +636,7 @@ object Dedup {
     * join on (band, bucket), signature-estimate prefilter, exact-Jaccard
     * verify against the document texts, ONE best-match row per
     * duplicated new doc. Results are identical by construction — the
-    * parity MemoEvictionSpec/IncrStateSpec pin. */
+    * parity IncrStateSpec pins. */
   private def incrBestMatch(s: SparkSession, docs: DataFrame,
       n: DataFrame, c: DataFrame): DataFrame =
     incrBestMatchSides(s, docs, docs, n, c)
@@ -800,7 +767,7 @@ object Dedup {
     * from the current key is a dead artifact (older fingerprint, older
     * parameters or format) that nothing will ever read again — delete
     * it, plus any orphaned `.stage-*` dirs a crashed writer left. This
-    * mirrors the memo evictStale discipline: without it every fixture
+    * mirrors the Hints leaf registry's eviction: without it every fixture
     * regeneration and every parameter change would leak a full corpus
     * signature table into java.io.tmpdir forever. */
   private[graft] def evictStaleSigState(s: SparkSession, d: String,
@@ -892,7 +859,8 @@ object Dedup {
     // Round 15 (VERDICT r14 item 7): write-time auto-compaction, the ANN
     // twin's byte-aware gate verbatim (Sim.annCompactDue — live count
     // above the small bound AND delta bytes justifying a base rewrite,
-    // or the hard listing-width cap): SigSegProbe at 100× measured the
+    // or the hard listing-width cap): the 100× A/B (BASELINE.md round 15,
+    // "Dedup sig-state segments") measured the
     // multi-segment read paying a corpus shuffle per action before the
     // anti-join read path landed; after it, reads are flat in segment
     // count while deltas stay broadcastable, so compaction's remaining
@@ -962,11 +930,12 @@ object Dedup {
       s.read.parquet(live.head._2.toString)
         .filter(!col("tomb")).select(cols: _*)
     else {
-      // Round 15 (guide §3.2; SigSegProbe at 100×): the old latest-wins
+      // Round 15 (guide §3.2; BASELINE.md round 15 "Dedup sig-state
+      // segments", 100×): the old latest-wins
       // — union all live segments, groupBy doc_id → max(seg), join back
       // — SHUFFLES THE CORPUS-SIZED BASE twice because 3 MB of delta
-      // arrived (probe: base 1.29 GB, deltas 3.5 MB; multi-segment reads
-      // 22–34 s vs 26.6 s compacted at heavy noise, and the probe run
+      // arrived (base 1.29 GB, deltas 3.5 MB; multi-segment reads
+      // 22–34 s vs 26.6 s compacted at heavy noise, and the measuring run
       // itself filled the disk with the reads' shuffle files). Deltas
       // are broadcastable by construction (bounded ingest batches), so
       // while their BYTES stay under [[SigDeltaBcBytes]] the merged view
@@ -1191,53 +1160,45 @@ object Dedup {
         s"clusterLabels: star contraction did not converge in maxRounds=$maxRounds " +
           "rounds; raise maxRounds for this edge set")
     // Materialize the converged labels ONCE (node-sized, safe at any
-    // scale): this is the shared leaf the label memo serves to
+    // scale): this is the shared label leaf served to
     // q_dedup_repr / q_dedup_split and the caller's final action.
     Hints.checkpoint(labelsFrom(edges), eager = true)
   }
 
-  /** Session-scoped memo of the checkpointed cluster-label leaf, shared
+  /** Registry key of the checkpointed cluster-label leaf, shared
     * between the AUDIT query (q_dedup_clusters) and the APPLY query
     * (q_dedup_repr): in production the labels are one materialized
     * artifact that every downstream consumer joins against, not a
     * pipeline each consumer re-runs. The key carries the documents
     * file's (mtime, length) fingerprint, so a fixture regeneration
-    * invalidates the entry instead of serving stale labels; the memo
+    * invalidates the entry instead of serving stale labels; the registry
     * holds cached-leaf DataFrames, whose blocks the ContextCleaner
     * reclaims once unreferenced.
     *
     * Accounting is asymmetric by design: [[dedupClusters]] always
-    * REBUILDS (and refreshes the memo) so its bench time keeps measuring
+    * REBUILDS (and refreshes the leaf) so its bench time keeps measuring
     * the full LSH→verify→propagate pipeline honestly, while
     * [[dedupRepr]] CONSUMES the shared leaf (building it only when it
     * runs standalone) and pays just its own join + window — the apply
     * step's real marginal cost. */
-  private val labelMemo = Hints.registerMemo(
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
+  private def labelKey(s: SparkSession, d: String): Hints.LeafKey =
+    Hints.leafKey(s, d, "labels", "documents")
 
-  /** Leak-guard registry for [[dedupLshSweep]]'s per-construction
-    * signature leaf (see memoPut there — rebuild always, unpersist the
-    * displaced entry). */
-  private val sweepSigMemo = Hints.registerMemo(
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-
-  private def labelKey(s: SparkSession, d: String): String =
-    System.identityHashCode(s.sparkContext) + ":" + d + "@" +
-      Tables.pathFingerprint(s, s"$d/documents.parquet")
+  private def sharedLabels(s: SparkSession, d: String): DataFrame =
+    Hints.leaf(labelKey(s, d))(buildLabels(s, d))
 
   /** Round 15 (VERDICT r14 item 4): the labeling stage now runs
     * [[Graph.ccAdjacency]] — adjacency-leaf min-label propagation with
     * frontier-delta rounds — instead of [[clusterLabels]]' edge-shaped
     * star contraction. The ccAdjacency scaladoc ARGUED the dedup family
     * should keep the edge shape ("clique-like pair lists converge in
-    * one round"); the measured A/B (graft.CcShapeProbe, 100× replica,
-    * same-JVM interleaved over one eagerly-checkpointed pair set,
+    * one round"); the measured A/B (BASELINE.md round 15
+    * "q_dedup_clusters", 100× replica, same-JVM interleaved over one
+    * eagerly-checkpointed pair set,
     * label maps cross-checked exactly equal — 47,700 members) refutes
     * it: star 5.64 s vs adjacency 3.39 s warm-min (1.66×), adjacency
     * faster on every rep. Both compute the same min-label fixpoint, so
-    * the declared outputs are unchanged (oracle subset re-verified).
-    * [[clusterLabels]] stays as the measured-rejected analogue the
-    * probe and specs exercise. */
+    * the declared outputs are unchanged (oracle subset re-verified). */
   private def buildLabels(s: SparkSession, d: String): DataFrame =
     Graph.ccAdjacency(s,
         nearDupPairs(Tables.documents(s, d),
@@ -1251,7 +1212,7 @@ object Dedup {
     * (the contamination that inflates benchmarks); hashing each
     * CLUSTER keeps every near-dup family on one side by construction.
     * Both schemes are computed here side by side from the SAME shared
-    * checkpointed label leaf ([[labelMemo]]), with singleton docs
+    * checkpointed label leaf ([[labelKey]]), with singleton docs
     * falling back to their own id (coalesce — labels only exist for
     * docs with at least one near-dup edge). The output pins the
     * argument numerically: n_leaky_naive counts clusters the doc-hash
@@ -1260,7 +1221,7 @@ object Dedup {
     * exact, stable under corpus growth — adding documents never moves
     * an existing cluster's assignment. */
   def dedupSplit(s: SparkSession, d: String): DataFrame = {
-    val cl = Hints.memoInsert(labelMemo, labelKey(s, d), buildLabels(s, d))
+    val cl = sharedLabels(s, d)
       .select(col("id").as("doc_id"), col("lbl").as("canon_id"))
     val g = Tables.documents(s, d).select(col("doc_id"))
       .join(cl, Seq("doc_id"), "left")
@@ -1295,7 +1256,7 @@ object Dedup {
 
   def dedupClusters(s: SparkSession, d: String): DataFrame = {
     val labels = buildLabels(s, d)
-    Hints.memoPut(labelMemo, labelKey(s, d), labels)
+    Hints.replaceLeaf(labelKey(s, d), labels)
     labels
       .select(col("id").as("doc_id"), col("lbl").as("canon_id"))
       .orderBy(col("doc_id").asc)
@@ -1308,11 +1269,11 @@ object Dedup {
     * in); everyone else points at the kept representative. The window
     * partitions by CLUSTER id, so partitions are cluster-sized regardless
     * of corpus size, and the cluster labels are the SHARED checkpointed
-    * leaf from [[labelMemo]] — the same convergence-guarded propagation
+    * leaf from [[labelKey]] — the same convergence-guarded propagation
     * q_dedup_clusters materializes, consumed here instead of re-run. */
   def dedupRepr(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("n_chars"))
-    val cl = Hints.memoInsert(labelMemo, labelKey(s, d), buildLabels(s, d))
+    val cl = sharedLabels(s, d)
       .select(col("id").as("doc_id"), col("lbl").as("canon_id"))
     val wFull = org.apache.spark.sql.expressions.Window
       .partitionBy(col("canon_id"))
@@ -1424,7 +1385,7 @@ object Dedup {
     // the md5-minhash map (md5 per shingle — this query's dominant
     // per-row cost) executing once per leg, with the join-key IsNotNull
     // pushdown re-deriving signatures in the scan filter on top. One
-    // persisted audit-cap-bounded frame per construction (memoPut —
+    // persisted audit-cap-bounded frame per construction (replaceLeaf —
     // rebuild-always, displaced entry unpersisted) serves both legs.
     val base = withMd5Sigs(
       withToks(Tables.spread(guarded))
@@ -1433,10 +1394,7 @@ object Dedup {
         .select(col("doc_id"), col("lang"), col("source"), col("tset")),
       "tset")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    Hints.memoPut(sweepSigMemo,
-      System.identityHashCode(s.sparkContext) + ":" + d + ":esterr-base@" +
-        Tables.pathFingerprint(s, s"$d/documents.parquet"),
-      base)
+    Hints.replaceLeaf(Hints.leafKey(s, d, "esterr-base", "documents"), base)
     val aCols = col("doc_id").as("a_id") +: col("lang").as("lang") +:
       col("source").as("source") +: col("tset").as("ta") +:
       (0 until MdPerms).map(i => col(s"s$i").as(s"a$i"))
@@ -1478,7 +1436,7 @@ object Dedup {
     // 8-perm signature per doc, THE dominant cost at scale) runs once
     // PER ARM. Lazy persist keeps construction job-free (the laziness
     // pin); the first arm's action populates the cache and the other two
-    // read it. memoPut, not memoInsert: this leaf has ONE consumer, so
+    // read it. replaceLeaf, not leaf: this leaf has ONE consumer, so
     // every construction REBUILDS it — bench reps keep paying the
     // signature stage (the honest-accounting discipline of
     // [[dedupClusters]]) — while the superseded entry is unpersisted so
@@ -1488,11 +1446,7 @@ object Dedup {
     // for a re-referenced stream whose base-scale derivation is cheap.
     val sigs = minhashMd5Sigs(Tables.documents(s, d))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    // Tag before '@' — see the dedupIncr note (evictStale contract).
-    Hints.memoPut(sweepSigMemo,
-      System.identityHashCode(s.sparkContext) + ":" + d + ":sweep-sigs@" +
-        Tables.pathFingerprint(s, s"$d/documents.parquet"),
-      sigs)
+    Hints.replaceLeaf(Hints.leafKey(s, d, "sweep-sigs", "documents"), sigs)
     def cfg(r: Int): DataFrame = {
       val bands = (0 until MdPerms / r).map { b =>
         concat_ws(":", (lit(b.toString) +:
@@ -1592,13 +1546,10 @@ object Dedup {
     // band join goes broadcast at fixture scale, so no AQE stage reuse)
     // PLUS a third evaluation inside the scan filter (the join keys'
     // inferred IsNotNull pushed below the project). Two longs per doc
-    // cached; memoPut rebuild-always discipline.
+    // cached; replaceLeaf rebuild-always discipline.
     val sigs = hammingSigs(Tables.documents(s, d))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    Hints.memoPut(sweepSigMemo,
-      System.identityHashCode(s.sparkContext) + ":" + d + ":ham-sigs@" +
-        Tables.pathFingerprint(s, s"$d/documents.parquet"),
-      sigs)
+    Hints.replaceLeaf(Hints.leafKey(s, d, "ham-sigs", "documents"), sigs)
     val bands = (0 until HamBands).map { k =>
       struct(lit(k.toLong).as("band_id"),
         shiftright(col("sig"), k * 8).bitwiseAND(255).as("bv"))

@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.broadcast
+
+import graft.Tables
 
 /** Statistics-aware broadcast hinting for iterative-state joins.
   *
@@ -22,6 +26,12 @@ import org.apache.spark.sql.functions.broadcast
   * bytes, because every caller's state row is a fixed narrow shape
   * (id + label / node + rank), so the row bound translates directly to a
   * build-side budget — see [[MaxBroadcastRows]] for the sizing rationale.
+  *
+  * Hints also owns the registry of session-scoped shared leaves ([[leaf]],
+  * [[replaceLeaf]], [[evictAllMemos]]): every cached intermediate that
+  * several queries of one session reuse (the token, gram, label,
+  * supported-pairs and PCA leaves, the per-construction signature
+  * leaves) lives in one map under one key format ([[leafKey]]).
   */
 object Hints {
   /** Max state rows that still get a broadcast hint. Was 2M through
@@ -135,80 +145,98 @@ object Hints {
       maxRows: Long = DimMaxBroadcastRows): DataFrame =
     if (rows >= 0 && rows <= maxRows) broadcast(df) else df.hint("SHUFFLE_HASH")
 
-  /** Shared-leaf memo maintenance for the session-scoped caches
-    * (Text.tokenLeaf, Dedup.labelMemo). Keys are
-    * `<scId>:<dir>@<fixture-fingerprint>`; a fixture REGENERATION
-    * changes only the fingerprint, so without eviction the superseded
-    * entry keeps its persisted/checkpointed DataFrame referenced for
-    * the session lifetime — leaked cache blocks on a long-lived
-    * session. On inserting a key, drop every entry with the same
-    * `<scId>:<dir>` prefix but a different fingerprint and unpersist
-    * its DataFrame (non-blocking; for checkpointed leaves the map
-    * removal is what makes the RDD blocks collectable). */
-  def memoInsert(memo: java.util.concurrent.ConcurrentHashMap[String, DataFrame],
-      key: String, build: => DataFrame): DataFrame = {
-    val df = memo.computeIfAbsent(key, _ => build)
-    evictStale(memo, key)
+  /** Identity of one session-scoped shared leaf: the SparkContext it
+    * was built in, the fixture dir, the leaf's name, and the fingerprint
+    * of the table it derives from. The name is part of the identity:
+    * leaves of one dir and one table (the token leaf and the dedup
+    * label leaf both derive from `documents`) coexist, and only an entry
+    * with the same (context, dir, name) and another fingerprint is
+    * stale. */
+  final case class LeafKey(ctx: Int, dir: String, name: String,
+      fingerprint: String)
+
+  /** The key of leaf `name` of fixture `d`, fingerprinted on
+    * `$d/$table.parquet` — the one place the key format lives. */
+  def leafKey(s: SparkSession, d: String, name: String,
+      table: String): LeafKey =
+    LeafKey(System.identityHashCode(s.sparkContext), d, name,
+      Tables.pathFingerprint(s, s"$d/$table.parquet"))
+
+  /** One registry cell per key. The build runs under the cell's own
+    * lock, never inside a ConcurrentHashMap compute, so a build that
+    * requests another leaf (the dedup labels build the verify-set leaf)
+    * goes through while each key is still built once. A failed build
+    * leaves the cell empty and the next request retries. */
+  private final class Cell { @volatile var df: DataFrame = _ }
+
+  private val leaves = new ConcurrentHashMap[LeafKey, Cell]()
+
+  /** The shared leaf `name` of fixture `d`, built at most once per
+    * (context, dir, name, fingerprint of `$d/$table.parquet`). A
+    * fixture REGENERATION changes only the fingerprint, so without
+    * eviction the superseded entry would keep its persisted or
+    * checkpointed DataFrame referenced for the session lifetime —
+    * leaked cache blocks on a long-lived session. So inserting a key
+    * drops every entry with the same (context, dir, name) and another
+    * fingerprint, and unpersists its DataFrame (non-blocking; for
+    * checkpointed leaves the removal is what makes the RDD blocks
+    * collectable). */
+  def leaf(s: SparkSession, d: String, name: String, table: String)(
+      build: => DataFrame): DataFrame =
+    leaf(leafKey(s, d, name, table))(build)
+
+  def leaf(key: LeafKey)(build: => DataFrame): DataFrame = {
+    val cell = leaves.computeIfAbsent(key, _ => new Cell)
+    val df = cell.synchronized {
+      if (cell.df == null) cell.df = build
+      cell.df
+    }
+    evictStale(key)
     df
   }
 
-  /** [[memoInsert]]'s overwrite twin for callers that always REBUILD
-    * (Dedup.dedupClusters' honest-bench accounting): displaces the same
-    * key too, unpersisting the displaced leaf. */
-  def memoPut(memo: java.util.concurrent.ConcurrentHashMap[String, DataFrame],
-      key: String, df: DataFrame): Unit = {
-    val old = memo.put(key, df)
-    if (old != null && (old ne df)) unpersistQuietly(old)
-    evictStale(memo, key)
+  /** [[leaf]]'s overwrite twin for callers that always REBUILD so their
+    * bench time keeps paying the derivation (Dedup.dedupClusters,
+    * Analytics.rebuildSupportedPairs, the per-construction signature
+    * leaves): installs `df` under `key`, unpersisting the displaced leaf
+    * and stale twins. */
+  def replaceLeaf(key: LeafKey, df: DataFrame): Unit = {
+    val cell = leaves.computeIfAbsent(key, _ => new Cell)
+    val old = cell.synchronized { val o = cell.df; cell.df = df; o }
+    if (old ne df) unpersistQuietly(old)
+    evictStale(key)
   }
 
-  private def evictStale(
-      memo: java.util.concurrent.ConcurrentHashMap[String, DataFrame],
-      key: String): Unit = {
-    val at = key.lastIndexOf('@')
-    if (at > 0) {
-      val prefix = key.substring(0, at + 1)
-      val it = memo.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey != key && e.getKey.startsWith(prefix)) {
-          unpersistQuietly(e.getValue)
-          it.remove()
-        }
-      }
+  private def evictStale(key: LeafKey): Unit =
+    leaves.forEach { (k, cell) =>
+      if (k != key && k.copy(fingerprint = key.fingerprint) == key &&
+          leaves.remove(k, cell))
+        unpersistQuietly(cell.df)
     }
-  }
 
   private def unpersistQuietly(df: DataFrame): Unit =
-    try df.unpersist(blocking = false)
-    catch { case _: Exception => () }
+    if (df != null)
+      try df.unpersist(blocking = false)
+      catch { case _: Exception => () }
 
-  /** Registry of every session-scoped leaf memo (tokenLeaf, gramLeaf,
-    * labelMemo, sweepSigMemo register at module init), so measurement
-    * harnesses can drop ALL cached leaves between queries. Query paths
-    * never call this — eviction there stays per-key via [[memoInsert]]/
-    * [[memoPut]]. */
-  private val allMemos =
-    new java.util.concurrent.CopyOnWriteArrayList[
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
-
-  def registerMemo(
-      m: java.util.concurrent.ConcurrentHashMap[String, DataFrame])
-      : java.util.concurrent.ConcurrentHashMap[String, DataFrame] = {
-    allMemos.add(m); m
+  /** The keys of every built leaf (tests inspect the registry). */
+  private[graft] def leafKeys: Seq[LeafKey] = {
+    val out = Seq.newBuilder[LeafKey]
+    leaves.forEach((k, cell) => if (cell.df != null) out += k)
+    out.result()
   }
 
-  /** Unpersist and forget every memoized leaf. Used by graft.Headroom's
+  /** Unpersist and forget every shared leaf. Used by graft.Headroom's
     * ALL/ONLY sweeps between queries so each measurement starts from the
     * cold-cache state a SOLO run would see: round 10 documented an
     * in-sweep-vs-solo gap of up to ~1.6× (basket_pairs 43.1 vs 26.4 s at
     * 100×, same day) caused by leaf-persisting neighbors holding
     * executor memory — with eviction the sweep numbers are primary
-    * evidence, not conservative upper bounds. Memo removal is also what
-    * makes checkpointed leaves' RDD blocks collectable. */
+    * evidence, not conservative upper bounds. Removal is also what
+    * makes checkpointed leaves' RDD blocks collectable. Query paths
+    * never call this; their eviction stays per-key. */
   def evictAllMemos(): Unit =
-    allMemos.forEach { m =>
-      m.values().forEach(df => unpersistQuietly(df))
-      m.clear()
+    leaves.forEach { (k, cell) =>
+      if (leaves.remove(k, cell)) unpersistQuietly(cell.df)
     }
 }

@@ -383,19 +383,21 @@ object Sim {
     simIvfProbeK(s, d, 2)
 
   /** Probe-3 twin (round 12): the next notch of the same lever, added
-    * because the honest SynthEmb fixtures measured probe-2 recall@5
-    * dipping to 0.98 at 100× (BASELINE.md round-11 recall table) — one
-    * more probed list buys the remaining tail misses. Extra cost is the
-    * sub-linear multi-probe shape: the fan-out multiplies only the
-    * 10-row broadcast query side by k, so the probed fraction of the
-    * corpus goes 2/nlist → 3/nlist while the corpus-sided work
-    * (assignment) is unchanged and shared. */
+    * because the honest formula-generated, non-replicated embedding
+    * fixtures measured probe-2 recall@5 dipping to 0.98 at 100×
+    * (BASELINE.md round 11, "Honest ANN recall on a NON-replicated
+    * corpus") — one more probed list buys the remaining tail misses.
+    * Extra cost is the sub-linear multi-probe shape: the fan-out
+    * multiplies only the 10-row broadcast query side by k, so the
+    * probed fraction of the corpus goes 2/nlist → 3/nlist while the
+    * corpus-sided work (assignment) is unchanged and shared. */
   def simIvfProbe3(s: SparkSession, d: String): DataFrame =
     simIvfProbeK(s, d, 3)
 
   /** K-means-REFINED IVF (round 12): the honest quality fix the probe
-    * sweep demanded. On the non-replicated SynthEmb fixtures the
-    * seed-stub coarse quantizer (first 8 vectors as centroids) plateaus:
+    * sweep demanded. On the non-replicated embedding fixtures
+    * (BASELINE.md round 12, "ANN recall hardening") the seed-stub
+    * coarse quantizer (first 8 vectors as centroids) plateaus:
     * recall@5 stays 0.98 at 100× through probe-4 and only hits 1.0 at
     * probe-5 — 5 of 8 lists is 62% of the corpus, not ANN. More probes
     * cannot fix BAD LIST GEOMETRY; one Lloyd round can. This family runs
@@ -475,10 +477,11 @@ object Sim {
           .as("n_moved"))
       .orderBy(col("list_id").asc)
 
-  /** Probe-2 search over the REFINED lists — measured on SynthEmb
-    * base/10×/100×: recall@5 1.000/1.000/1.000 (min 5/5 per query) vs
-    * the seed index's probe-2 1.00/1.00/0.98 (BASELINE.md round-12
-    * recall table), at the same probed fraction (2/8 lists). */
+  /** Probe-2 search over the REFINED lists — measured on the
+    * non-replicated embedding fixtures at base/10×/100×: recall@5
+    * 1.000/1.000/1.000 (min 5/5 per query) vs the seed index's probe-2
+    * 1.00/1.00/0.98 (BASELINE.md round-12 recall table), at the same
+    * probed fraction (2/8 lists). */
   def simIvfKmProbe2(s: SparkSession, d: String): DataFrame = {
     val probes = ivfKmAssignK(s, d, 2).filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_arr"),
@@ -518,8 +521,8 @@ object Sim {
   private[graft] val AnnDupCos = 0.4
   /** Max LIVE segments before [[appendAnnState]] folds the state
     * (write-time compaction, LSM-style read-amplification bound).
-    * Measured on the 100× replica (graft.AnnSegProbe, round 14 —
-    * BASELINE.md table): the step cost is CROSSING from 1 segment to
+    * Measured on the 100× replica (BASELINE.md round 14, "ANN
+    * multi-segment read path"): the step cost is CROSSING from 1 segment to
     * any multi-segment state (warm stored search 0.73 s compacted →
     * 1.26–1.52 s, ≈2×: the latest-wins self-join replaces the plain
     * clustered scan), while additional bounded deltas are nearly flat
@@ -538,7 +541,7 @@ object Sim {
     * delta bytes ≥ ratio × base bytes makes the cadence proportional to
     * corpus size (classic LSM bound: amortized rewrite cost per
     * ingested byte ≤ 1/ratio ≈ 10×, paid when the merge is worth it) —
-    * justified by the AnnSegProbe table itself: read cost is ~FLAT in
+    * justified by that round-14 table itself: read cost is ~FLAT in
     * segment count for bounded deltas, so deferring the fold costs only
     * the already-paid 2× multi-segment step, not further growth. */
   private[graft] val AnnCompactRatio = 0.10
@@ -659,8 +662,7 @@ object Sim {
     * recentered per delta (the standard IVF ingest contract: lists
     * drift, periodic rebuild re-trains — a retrain writes a new state
     * version via the params/fingerprint key). */
-  def appendAnnState(s: SparkSession, d: String, deltaVecs: DataFrame,
-      autoCompact: Boolean = true): Unit = {
+  def appendAnnState(s: SparkSession, d: String, deltaVecs: DataFrame): Unit = {
     val path = annEnsure(s, d)
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -698,8 +700,7 @@ object Sim {
     // on a fixed ingest cadence (see [[AnnCompactRatio]]). Callers on a
     // latency budget (the streaming ingest path) still see a periodic
     // spike when the gate opens — bounded to ~1/ratio of bytes ingested.
-    if (autoCompact && annCompactDue(fs, root))
-      compactAnnState(s, d)
+    if (annCompactDue(fs, root)) compactAnnState(s, d)
   }
 
   /** The compaction decision (ADVICE r14): fold when the live count
@@ -1256,11 +1257,11 @@ object Sim {
     recallAt5(s, d, simIvfSearch(s, d).select(col("q_id"), col("c_id")))
 
   /** Recall@5 of ANY approximate (q_id, c_id) result set against the
-    * same brute-force truth — factored out of [[simRecall]] so the
-    * scale harness ([[graft.RecallProbe]]) can evaluate probe-2 (and
-    * future index variants) against the identical truth without
-    * duplicating it. `q_sim_recall`'s plan is unchanged: it is exactly
-    * this with the probe-1 search as the approx side. */
+    * same brute-force truth — factored out of [[simRecall]] so other
+    * index variants (probe-2, the specs) are evaluated against the
+    * identical truth without duplicating it; the recall tables in
+    * BASELINE.md rounds 11-12 were measured this way. `q_sim_recall`'s
+    * plan is exactly this with the probe-1 search as the approx side. */
   def recallAt5(s: SparkSession, d: String, approx: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("c_id").asc)
@@ -1418,40 +1419,36 @@ object Sim {
       .orderBy(col("dim").asc)
   }
 
-  /** Session-scoped memo of the PCA loadings leaf — dims-sized (64
-    * rows), the "trained artifact" the projection query applies. Same
-    * discipline as Dedup.labelMemo / Analytics.supportedPairsMemo:
+  /** Registry key of the PCA loadings leaf — dims-sized (64 rows), the
+    * "trained artifact" the projection query applies. Same discipline
+    * as the dedup label leaf and Analytics.supportedPairs:
     * q_emb_pca_power — the trainer — always REBUILDS and refreshes the
-    * memo (its bench time keeps measuring the full Gram build + power
+    * leaf (its bench time keeps measuring the full Gram build + power
     * rounds honestly); q_emb_project consumes the shared leaf and pays
     * only its own corpus-scale projection — the apply step's real
     * marginal cost (in production the loadings are one materialized
     * model every scorer broadcasts, not a pipeline each scorer
     * re-trains). Keyed on the embeddings file fingerprint so a fixture
     * regeneration invalidates instead of serving stale loadings. */
-  private val pcaMemo = Hints.registerMemo(
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-
-  private def pcaKey(s: SparkSession, d: String): String =
-    System.identityHashCode(s.sparkContext) + ":" + d + "@" +
-      Tables.pathFingerprint(s, s"$d/embeddings.parquet")
+  private def pcaKey(s: SparkSession, d: String): Hints.LeafKey =
+    Hints.leafKey(s, d, "pca", "embeddings")
 
   private def buildPcaLeaf(s: SparkSession, d: String): DataFrame =
     // LAZY leaf: the caller's first action materializes it (the
     // trainer's own count, or the scorer's broadcast build on a
-    // standalone miss). The labelMemo lazy-leaf race note does not
+    // standalone miss). The dedup label leaf's lazy-leaf race note does not
     // apply — every consumer references the leaf exactly once (a
     // broadcast model join), never through a self-union.
     Hints.checkpoint(embPcaPower(s, d), eager = false)
 
   private[graft] def pcaLoadingsRebuild(s: SparkSession, d: String): DataFrame = {
     val leaf = buildPcaLeaf(s, d)
-    Hints.memoPut(pcaMemo, pcaKey(s, d), leaf)
+    Hints.replaceLeaf(pcaKey(s, d), leaf)
     leaf
   }
 
   private[graft] def pcaLoadings(s: SparkSession, d: String): DataFrame =
-    Hints.memoInsert(pcaMemo, pcaKey(s, d), buildPcaLeaf(s, d))
+    Hints.leaf(pcaKey(s, d))(buildPcaLeaf(s, d))
 
   /** Apply the learned PCA transform at corpus scale: project every
     * embedding onto [[embPcaPower]]'s dominant component — the map-only
@@ -1464,7 +1461,7 @@ object Sim {
     * iteration CTE verbatim. */
   def embProject(s: SparkSession, d: String): DataFrame = {
     // Round 15: the loadings come from the shared memo leaf (trainer
-    // rebuilds, scorer consumes — see [[pcaMemo]]); standalone runs
+    // rebuilds, scorer consumes — see [[pcaKey]]); standalone runs
     // build it once on the miss.
     val v = pcaLoadings(s, d)
       .select(col("dim").cast("int").as("j"), col("loading_micro").as("lv"))
@@ -1479,7 +1476,7 @@ object Sim {
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // rebuild-always accounting (the labelMemo convention): the trainer
+    // rebuild-always accounting (the dedup label-leaf convention): the trainer
     // measures the full Gram + power rounds and refreshes the leaf
     "q_emb_pca_power" -> pcaLoadingsRebuild,
     "q_emb_project" -> embProject,

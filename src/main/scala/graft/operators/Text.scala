@@ -17,16 +17,6 @@ object Text {
 
   private def toks = split(col("text"), " ")
 
-  /** Session-scoped memo of the tokenized-corpus leaf shared by the text
-    * family (the [[Dedup.labelMemo]] pattern applied to tokenization). */
-  private val tokLeafMemo = Hints.registerMemo(
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-
-  /** Session-scoped memo of the positional n-gram leaves (one entry per
-    * gram width n) — [[tokenLeaf]]'s pattern one level up. */
-  private val gramLeafMemo = Hints.registerMemo(
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-
   /** One row per n-gram WINDOW position of every document — (doc_id,
     * n_toks, p, g) with p the 1-based window start and g the
     * space-joined gram. The 5-gram stream feeds the exact-substring-
@@ -36,15 +26,13 @@ object Text {
     * corpus; at 100 TB the gram derivation IS those queries' dominant
     * cost, so derive-once is the same economics as [[tokenLeaf]].
     * Same discipline too: lazy persist (MEMORY_AND_DISK_SER) so
-    * construction stays job-free, keyed by (fixture fingerprint, n)
-    * with stale-entry eviction via Hints.memoInsert. Built from the
+    * construction stays job-free, one [[Hints.leaf]] per gram width n
+    * with stale-entry eviction. Built from the
     * document scan directly (the token ARRAY is needed per row — the
     * exploded [[tokenLeaf]] would have to re-group to rebuild windows,
     * a shuffle the split() scan doesn't pay). */
   private[graft] def gramLeaf(s: SparkSession, d: String, n: Int): DataFrame =
-    Hints.memoInsert(gramLeafMemo,
-      System.identityHashCode(s.sparkContext) + ":" + d + "#" + n + "@" +
-        Tables.pathFingerprint(s, s"$d/documents.parquet"),
+    Hints.leaf(s, d, s"grams#$n", "documents") {
       Tables.spread(Tables.documents(s, d))
         .withColumn("toks", toks)
         .filter(size(col("toks")) >= n)
@@ -54,7 +42,8 @@ object Text {
               s"i -> concat_ws(' ', slice(toks, i, $n)))")))
         .select(col("doc_id"), col("n_toks"), (col("pos") + 1).as("p"),
           col("col").as("g"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    }
 
   /** One row per whitespace token of every document — (doc_id, lang,
     * source, pos, tok), lazily cached and shared across every text query
@@ -69,17 +58,16 @@ object Text {
     * pressure, so the leaf never pins unified memory the consumers'
     * hash aggregates need. Keyed by the documents file's (mtime, length)
     * fingerprint, so a fixture regeneration invalidates the entry
-    * instead of serving stale tokens (Hints.memoInsert evicts and
+    * instead of serving stale tokens ([[Hints.leaf]] evicts and
     * unpersists the superseded entry so regenerations don't leak cached
     * blocks across a long-lived session). */
   private[graft] def tokenLeaf(s: SparkSession, d: String): DataFrame =
-    Hints.memoInsert(tokLeafMemo,
-      System.identityHashCode(s.sparkContext) + ":" + d + "@" +
-        Tables.pathFingerprint(s, s"$d/documents.parquet"),
+    Hints.leaf(s, d, "tokens", "documents") {
       Tables.spread(Tables.documents(s, d))
         .select(col("doc_id"), col("lang"), col("source"),
           posexplode(toks).as(Seq("pos", "tok")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    }
 
   /** The (doc_id, tok, tf) POSTING-COUNT subplan — the shared first
     * aggregate of the posting-shaped family (round 16, VERDICT r15
@@ -95,7 +83,8 @@ object Text {
     * table.
     *
     * NOT persisted — a measured rejection, both driver instruments
-    * (round 16, LeafShapeProbe same-JVM interleaved A/Bs): at fixture
+    * (same-JVM interleaved A/Bs, BASELINE.md round 16 "posting/feature/
+    * signature leaf candidates"): at fixture
     * scale the serialize + columnar-read barrier beats the saved 5k-doc
     * aggregate (bm25 warm-min 2.17 stateless vs 2.31 s leafed), and at
     * the 100× replica the solo construction pays the corpus-sized cache
@@ -207,43 +196,38 @@ object Text {
     * stage BOTH langid consumers walk (the declared query and the
     * confusion-matrix eval re-derive everything after it from this
     * docs×≤5-row table). Shared-leaf treatment (multi-consumer ⇒
-    * memoInsert, the tokenLeaf/gramLeaf family) — retained after the
+    * [[Hints.leaf]], the tokenLeaf/gramLeaf family) — retained after the
     * round-12 expression rewrite cut the cold build itself from 27.9 to
     * 4.1 s solo at 100× (see the builder note below): the leaf still
     * saves the second consumer's corpus scan, it just no longer
     * dominates. Sweep min-of-2 rows for this pair report the warm read
-    * (the standing memoInsert measurement semantics — same as every
+    * (the standing [[Hints.leaf]] measurement semantics — same as every
     * tokenLeaf/gramLeaf consumer); BASELINE.md round 12 states both
     * numbers. */
-  private val lidScoreMemo = Hints.registerMemo(
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-
   private def langidScoreLeaf(s: SparkSession, d: String): DataFrame =
-    Hints.memoInsert(lidScoreMemo,
-      System.identityHashCode(s.sparkContext) + ":" + d + ":lid-scores@" +
-        Tables.pathFingerprint(s, s"$d/documents.parquet"), {
-        // Round 12 (VERDICT r11 item 5): the corpus-sized stage is now the
-        // codegen'd one-pass expression (functions.LangTrigramScores) —
-        // the len−2-per-doc trigram explode, the 20-row broadcast join
-        // and the corpus-wide partial aggregate all collapse into a
-        // narrow per-doc map emitting ≤5 (lang, score) rows directly.
-        // Row-identical to the declarative formulation by construction
-        // (LidNativeSpec pins it, including non-ASCII inputs); the
-        // DuckDB oracle still replays the windowed-join form. Measured
-        // same-session stash A/B at 100× (TimeOne rep1 = cold leaf
-        // build): langid 27.9 → 4.1 s, lid_eval cold 5.5 s, warm reads
-        // 1.2–1.5 s unchanged — the memo is now insurance for the
-        // two-consumer pair, no longer the main lever (pair cold+warm
-        // ≈ 5.3 s vs the round-11 33 s).
-        graft.functions.VectorExprs.register(s)
-        val docs = Tables.documents(s, d)
-        Tables.spread(docs)
-          .select(col("doc_id"),
-            explode(expr("lang_trigram_scores(text)")).as("ls"))
-          .select(col("doc_id"), col("ls.lang").as("lang_p"),
-            col("ls.score").as("score"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      })
+    Hints.leaf(s, d, "lid-scores", "documents") {
+      // Round 12 (VERDICT r11 item 5): the corpus-sized stage is now the
+      // codegen'd one-pass expression (functions.LangTrigramScores) —
+      // the len−2-per-doc trigram explode, the 20-row broadcast join
+      // and the corpus-wide partial aggregate all collapse into a
+      // narrow per-doc map emitting ≤5 (lang, score) rows directly.
+      // Row-identical to the declarative formulation by construction
+      // (LidNativeSpec pins it, including non-ASCII inputs); the
+      // DuckDB oracle still replays the windowed-join form. Measured
+      // same-session stash A/B at 100× (TimeOne rep1 = cold leaf
+      // build): langid 27.9 → 4.1 s, lid_eval cold 5.5 s, warm reads
+      // 1.2–1.5 s unchanged — the memo is now insurance for the
+      // two-consumer pair, no longer the main lever (pair cold+warm
+      // ≈ 5.3 s vs the round-11 33 s).
+      graft.functions.VectorExprs.register(s)
+      val docs = Tables.documents(s, d)
+      Tables.spread(docs)
+        .select(col("doc_id"),
+          explode(expr("lang_trigram_scores(text)")).as("ls"))
+        .select(col("doc_id"), col("ls.lang").as("lang_p"),
+          col("ls.score").as("score"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    }
 
   private def langidPerDoc(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -949,10 +933,11 @@ object Text {
     // Round 16, measured and KEPT AS-IS: routing the two corpus
     // histograms through the per-doc (doc_id, lang, b) aggregate — so
     // the md5 feature map runs once and AQE stage reuse shares its
-    // exchange — LOSES at the 100× replica (LeafShapeProbe, 5-rep
-    // interleaved: 18.78 s this shape vs 19.28 s restructured at min,
-    // medians 21.3 vs 24.7): the shared aggregate's ~(docs×buckets)-
-    // group reduce side re-runs per consumer, which costs more than
+    // exchange — LOSES at the 100× replica (BASELINE.md round 16
+    // "posting/feature/signature leaf candidates", 5-rep interleaved:
+    // 18.78 s this shape vs 19.28 s restructured at min, medians 21.3 vs
+    // 24.7): the shared aggregate's ~(docs×buckets)-group reduce side
+    // re-runs per consumer, which costs more than
     // re-evaluating the md5 map under the histograms' map-side partial
     // aggregation (64-bucket partials — near-free shuffles).
     val tgt = feats.filter(col("lang") === "en")
@@ -1015,25 +1000,20 @@ object Text {
     * (truncate) and DuckDB `//` (floor) agree. Output: (doc_id, n_bi,
     * nll_micro, nll_per_bi) for the scored half. */
 
-  /** Session-scoped memo of the LM vocab-count leaves ([[tokenLeaf]]
-    * discipline, ADVICE r15): [[textLmPpl]] and [[textPplBucket]] (which
-    * re-invokes it) share ONE build of the unigram and bigram-score
-    * count tables instead of each construction re-checkpointing both and
-    * leaking the superseded blocks for the session lifetime. */
-  private val lmLeafMemo = Hints.registerMemo(
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-
-  /** Exact row counts of the memoized LM leaves, keyed like the leaves.
+  /** Exact row counts of the LM vocab leaves, keyed like the leaves.
     * Tiny scalars only (never DataFrames), populated inside the same
-    * memo build that checkpoints the leaf, so a leaf hit always finds
+    * leaf build that checkpoints the leaf, so a leaf hit always finds
     * its count. Entries orphaned by evictAllMemos are harmless: the key
     * embeds the fixture fingerprint, so a rebuilt leaf of the same key
     * has the same count by construction. */
   private val lmLeafRows =
-    new java.util.concurrent.ConcurrentHashMap[String, Long]()
+    new java.util.concurrent.ConcurrentHashMap[Hints.LeafKey, Long]()
 
   /** The two vocabulary-sized LM count tables as lazily-checkpointed
-    * memo leaves plus their exact row counts. Round-15 measured the old
+    * shared leaves plus their exact row counts: [[textLmPpl]] and
+    * [[textPplBucket]] (which re-invokes it) share ONE build of both
+    * instead of each construction re-checkpointing them and leaking the
+    * superseded blocks for the session lifetime. Round-15 measured the old
     * "AQE broadcasts the vocab side at fixture scale" claim FALSE for 2
     * of 6 vocab joins (plans/r15/q_text_lm_ppl_final_before.txt: the
     * scored corpus-scale bigram stream paid an Exchange + double Sort
@@ -1044,17 +1024,15 @@ object Text {
     * build = vocab side, stream sort-free, never a bare SMJ re-sort).
     * Round-16 (ADVICE r15): checkpoints are eager = false so the ONE
     * bound count materializes each leaf (no separate checkpoint job),
-    * and both leaves ride the fingerprint-keyed memo. The counts are
+    * and both leaves ride the fingerprint-keyed registry. The counts are
     * construction-time actions by design — q_text_lm_ppl /
     * q_text_ppl_bucket are exempted and budget-pinned in
     * PlanQualitySpec, the naivebayes treatment. */
   private def lmVocabLeaves(
       s: SparkSession, d: String): (DataFrame, Long, DataFrame, Long) = {
-    val base = System.identityHashCode(s.sparkContext) + ":" + d
-    val fp = Tables.pathFingerprint(s, s"$d/documents.parquet")
-    val uniKey = base + ":lmuni@" + fp
-    val biKey = base + ":lmbi@" + fp
-    val uni = Hints.memoInsert(lmLeafMemo, uniKey, {
+    val uniKey = Hints.leafKey(s, d, "lm-uni", "documents")
+    val biKey = Hints.leafKey(s, d, "lm-bi", "documents")
+    val uni = Hints.leaf(uniKey) {
       val dk = Tables.spread(Tables.documents(s, d)).withColumn("tk", toks)
       val utrain = dk.filter(col("doc_id") % 2 === 0)
         .select(col("doc_id"), explode(col("tk")).as("w"))
@@ -1064,9 +1042,9 @@ object Text {
         eager = false)
       lmLeafRows.put(uniKey, df.count())
       df
-    })
+    }
     val nVocab = lmLeafRows.get(uniKey)
-    val bi = Hints.memoInsert(lmLeafMemo, biKey, {
+    val bi = Hints.leaf(biKey) {
       val dk = Tables.spread(Tables.documents(s, d)).withColumn("tk", toks)
       val btrain = dk.filter(size(col("tk")) >= 2 && col("doc_id") % 2 === 0)
         .select(explode(expr(
@@ -1084,7 +1062,7 @@ object Text {
         eager = false)
       lmLeafRows.put(biKey, df.count())
       df
-    })
+    }
     (uni, nVocab, bi, lmLeafRows.get(biKey))
   }
 
@@ -1167,7 +1145,8 @@ object Text {
   def textBm25(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // Round 16, measured and KEPT AS-IS (VERDICT r15 item 6 A/B'd at the
-    // 100× replica, LeafShapeProbe): deriving dl/df from the posting
+    // 100× replica, BASELINE.md round 16 "posting/feature/signature leaf
+    // candidates"): deriving dl/df from the posting
     // aggregate — one corpus shuffle instead of three — LOSES at 100×
     // (7.66 s r15 shape vs 9.54 s derived, 5-rep interleaved mins;
     // medians 8.3 vs 10.2): AQE stage reuse shares only the tf

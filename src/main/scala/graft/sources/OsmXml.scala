@@ -29,9 +29,12 @@ import org.apache.spark.sql.functions._
   * `2019-10-16 21:18:25` under UTC); `version` is read as a long and
   * rendered as a string.
   *
-  * Scale: the XML source splits files across tasks and each element
-  * flattens independently — the same streaming-ETL shape as iterparse,
-  * but partition-parallel.
+  * Scale: each element flattens independently — the same streaming-ETL
+  * shape as iterparse. The XML source parallelizes across FILES only: a
+  * directory of extracts reads one task per file, but a single extract
+  * is read as one partition under the source's default `multiLine=true`
+  * (a 45 MB extract gave 1 partition), so one file's parse runs in one
+  * task.
   */
 object OsmXml {
 
