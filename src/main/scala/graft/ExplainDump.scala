@@ -8,9 +8,10 @@ import org.apache.spark.sql.SparkSession
   * these instead of running Spark).
   *
   * `runMain graft.ExplainDump <outDir> <suffix> q_a,q_b[,...] [dataDir]`
-  * writes `<outDir>/<query>_<suffix>.txt` per query. Session config
-  * mirrors Bench (local[$SPARK_GRAFT_CPUS], AQE initialPartitionNum
-  * 512) so the dumped initial plans match what the bench executes. */
+  * writes `<outDir>/<query>_<suffix>.txt` per query. The session runs
+  * at local[$SPARK_GRAFT_CPUS] with AQE, like Bench, and additionally
+  * sets AQE's initialPartitionNum to 512, which Bench does not: shuffle
+  * partition counts in the dumps can differ from what the bench runs. */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val outDir = new java.io.File(args(0))

@@ -2,25 +2,21 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** SparkSessionExtensions entry point: installs the engine's native
-  * expressions into every session built with
-  * `spark.sql.extensions=graft.GraftExtensions` — the deployment-grade
-  * alternative to per-session FunctionRegistry registration (the path a
-  * cluster admin would configure once for all jobs).
+  * functions (the one table in `functions.VectorExprs.functions`) into
+  * every session built with `spark.sql.extensions=graft.GraftExtensions`
+  * — the deployment-grade alternative to per-session FunctionRegistry
+  * registration (the path a cluster admin would configure once for all
+  * jobs).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[functions.DotProduct].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => functions.DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("haversine_km"),
-      new ExpressionInfo(classOf[functions.HaversineKm].getName, "haversine_km"),
-      (exprs: Seq[Expression]) =>
-        functions.HaversineKm(exprs(0), exprs(1), exprs(2), exprs(3))))
+    functions.VectorExprs.functions.foreach { case (name, cls, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
     // Pure range joins (abs(a-b) <= w with no equi key) rewrite to the
     // bucketed-interval equi-join — see graft.plans.RangeJoinRewrite.
     ext.injectOptimizerRule(_ => plans.RangeJoinRewrite)

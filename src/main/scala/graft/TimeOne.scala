@@ -10,12 +10,14 @@ import org.apache.spark.sql.SparkSession
   * memo-leaf queries (fresh JVM, dir-keyed memos empty), reps 2–3 the
   * warm reads — both sides of the standing leaf measurement semantics.
   * Replica dirs (/tmp/graft-sf1, /tmp/graft-sf10x) work as `dir`;
-  * 100× runs want SPARK_DRIVER_MEM=24g like Headroom. */
+  * 100× runs want SPARK_DRIVER_MEM=24g like Headroom. Runs at
+  * local[$SPARK_GRAFT_CPUS] (default 32), like Bench. */
 object TimeOne {
   def main(args: Array[String]): Unit = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = Harness.withStallTolerances(
-      SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
+      SparkSession.builder().master(s"local[$cpus]")
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")).getOrCreate()

@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, ArrayType, LongType, StringType, StructField, StructType}
@@ -674,78 +675,53 @@ case class PackedPairs(child: Expression) extends UnaryExpression {
 }
 
 object VectorExprs {
-  /** Register `vec_dot`, `minhash_sigs` and `haversine_km` in the
-    * session's function registry so query code can use them via
-    * expr(...). Idempotent. */
+  /** The INT literal `e` passed as argument `arg` of `fn`; anything else
+    * (e.g. `32L` or a column) fails analysis with a real message, not a
+    * ClassCastException from a blind cast. */
+  private def intLiteral(fn: String, arg: String, e: Expression): Int =
+    if (!e.foldable) throw new IllegalArgumentException(
+      s"$fn: $arg must be a foldable INT literal, got ${e.sql}")
+    else e.eval() match {
+      case i: Int => i
+      case other => throw new IllegalArgumentException(
+        s"$fn: $arg must be an INT literal, got $other (${e.dataType.simpleString})")
+    }
+
+  /** The engine's native functions — name, implementing class, builder —
+    * installed by [[register]] and by graft.GraftExtensions. */
+  private[graft] val functions
+      : Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("vec_dot", classOf[DotProduct], e => DotProduct(e(0), e(1))),
+    ("lg_micro", classOf[LgMicro], e => LgMicro(e(0))),
+    ("haversine_km", classOf[HaversineKm],
+      e => HaversineKm(e(0), e(1), e(2), e(3))),
+    ("simhash_sig", classOf[SimHashSig], e => SimHashSig(e(0))),
+    ("packed_pairs", classOf[PackedPairs], e => PackedPairs(e(0))),
+    ("lang_trigram_scores", classOf[LangTrigramScores],
+      e => LangTrigramScores(e(0), graft.operators.Text.langProfiles)),
+    ("char_ngrams", classOf[CharNgrams],
+      e => CharNgrams(e(0), intLiteral("char_ngrams", "n", e(1)))),
+    ("minhash_sigs", classOf[MinHashSigs],
+      e => MinHashSigs(e(0), intLiteral("minhash_sigs", "numPerms", e(1)))),
+    ("md5_minhash_sigs", classOf[Md5MinHashSigs],
+      e => Md5MinHashSigs(e(0),
+        intLiteral("md5_minhash_sigs", "numPerms", e(1)))),
+    ("wavg_cents", classOf[WeightedAvgCents],
+      e => WeightedAvgCents(e(0), e(1)).toAggregateExpression()),
+    ("wmedian_cents", classOf[WeightedMedianCents],
+      e => WeightedMedianCents(e(0), e(1)).toAggregateExpression()))
+
+  /** Install [[functions]] in the session's function registry so query
+    * code can use them via expr(...). A no-op for names the session
+    * already holds (a session built with graft.GraftExtensions holds
+    * all of them), so the per-construction calls never re-register. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lg_micro", exprs => LgMicro(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "haversine_km",
-      exprs => HaversineKm(exprs(0), exprs(1), exprs(2), exprs(3)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash_sig", exprs => SimHashSig(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "packed_pairs", exprs => PackedPairs(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lang_trigram_scores", exprs =>
-        LangTrigramScores(exprs(0), graft.operators.Text.langProfiles),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_ngrams", { exprs =>
-        val n = exprs(1) match {
-          case e if e.foldable => e.eval() match {
-            case i: Int => i
-            case other => throw new IllegalArgumentException(
-              s"char_ngrams: n must be an INT literal, got $other")
-          }
-          case e => throw new IllegalArgumentException(
-            s"char_ngrams: n must be a foldable INT literal, got ${e.sql}")
-        }
-        CharNgrams(exprs(0), n)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sigs", { exprs =>
-        // Checked foldable-literal extraction: a non-integer perm count
-        // (e.g. written as 32L or a column) must fail analysis with a
-        // real message, not a ClassCastException from a blind cast.
-        val n = exprs(1) match {
-          case e if e.foldable => e.eval() match {
-            case i: Int => i
-            case other => throw new IllegalArgumentException(
-              "minhash_sigs: numPerms must be an INT literal, got " +
-                s"$other (${e.dataType.simpleString})")
-          }
-          case e => throw new IllegalArgumentException(
-            "minhash_sigs: numPerms must be a foldable INT literal, got " +
-              e.sql)
-        }
-        MinHashSigs(exprs(0), n)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_minhash_sigs", { exprs =>
-        val n = exprs(1) match {
-          case e if e.foldable => e.eval() match {
-            case i: Int => i
-            case other => throw new IllegalArgumentException(
-              "md5_minhash_sigs: numPerms must be an INT literal, got " +
-                s"$other (${e.dataType.simpleString})")
-          }
-          case e => throw new IllegalArgumentException(
-            "md5_minhash_sigs: numPerms must be a foldable INT literal, got " +
-              e.sql)
-        }
-        Md5MinHashSigs(exprs(0), n)
-      }, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "wavg_cents", exprs =>
-        WeightedAvgCents(exprs(0), exprs(1)).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "wmedian_cents", exprs =>
-        WeightedMedianCents(exprs(0), exprs(1)).toAggregateExpression(),
-      "built-in")
+    val registry = spark.sessionState.functionRegistry
+    functions.foreach { case (name, cls, build) =>
+      val id = FunctionIdentifier(name)
+      if (!registry.functionExists(id))
+        registry.registerFunction(id, new ExpressionInfo(cls.getName, name),
+          build)
+    }
   }
 }

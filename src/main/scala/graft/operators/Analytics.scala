@@ -539,32 +539,14 @@ object Analytics {
     * tax (see [[pairSupport]]). Same discipline as the dedup label
     * leaf: a [[Hints.leaf]] fingerprinted on `lineitem`, stale siblings
     * evicted on insert, dropped wholesale by measurement harnesses via
-    * Hints.evictAllMemos. Accounting mirrors the dedup convention:
-    * q_graph_cc — the family's heaviest consumer — always REBUILDS and
-    * refreshes the leaf (its bench time keeps measuring the full
-    * derivation honestly); kcore and lift consume the shared leaf.
-    * Measured solo at 100× (TimeOne, BASELINE.md round 15): warm
-    * consumers drop to their own round cost — kcore 37.7 → ~5.6 s,
-    * cc rounds ~10 s — while cold cost is unchanged from r14 (the
-    * eager survivor-set checkpoint existed there per query). */
-  private def supportedPairsKey(s: SparkSession, d: String): Hints.LeafKey =
-    Hints.leafKey(s, d, "supported-pairs", "lineitem")
-
-  private def buildSupportedPairs(s: SparkSession, d: String): DataFrame =
-    Hints.checkpoint(pairSupport(s, d).filter(col("sup") >= 2),
-      eager = true)
-
+    * Hints.evictAllMemos. Measured solo at 100× (TimeOne, BASELINE.md
+    * round 15): warm consumers drop to their own round cost — kcore
+    * 37.7 → ~5.6 s, cc rounds ~10 s — while cold cost is unchanged from
+    * r14 (the eager survivor-set checkpoint existed there per query). */
   private[graft] def supportedPairs(s: SparkSession, d: String): DataFrame =
-    Hints.leaf(supportedPairsKey(s, d))(buildSupportedPairs(s, d))
-
-  /** q_graph_cc's rebuild-always entry: refresh the leaf so later
-    * consumers in the same session reuse it (replaceLeaf unpersists the
-    * displaced entry — no block leak). */
-  private[graft] def rebuildSupportedPairs(s: SparkSession, d: String): DataFrame = {
-    val leaf = buildSupportedPairs(s, d)
-    Hints.replaceLeaf(supportedPairsKey(s, d), leaf)
-    leaf
-  }
+    Hints.leaf(s, d, "supported-pairs", "lineitem")(
+      Hints.checkpoint(pairSupport(s, d).filter(col("sup") >= 2),
+        eager = true))
 
   /** Market-basket co-occurrence — the association-rule support count:
     * part pairs appearing in the same order, top-20 by support. Pairs per

@@ -27,6 +27,11 @@ object Dedup {
 
   private def toks = array_distinct(split(col("text"), " "))
 
+  /** The storage of every signature and shingle-set leaf built here:
+    * serialized, spilling to disk under memory pressure. */
+  private def persisted(df: DataFrame): DataFrame =
+    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+
   // ------------------------------------------------------ audit size guard
 
   /** The block-quadratic audits (q_dedup_jaccard/contain + their LSH
@@ -170,11 +175,10 @@ object Dedup {
     * map (the candidate join goes broadcast at fixture scale, so there
     * is no exchange for AQE stage-reuse to share), and the join keys'
     * inferred IsNotNull pushed a second full signature evaluation into
-    * the scan filter. The declared twins persist this frame once per
-    * construction (Hints.replaceLeaf — rebuilt every construction,
-    * superseded entry unpersisted) and feed BOTH candidate legs and both
-    * verify legs from it; property tests keep the stateless plan. Bulk is
-    * bounded: the audit guard caps the input at ≈[[AuditCap]] rows. */
+    * the scan filter. The declared twins persist this frame as a
+    * [[Hints.leaf]] and feed BOTH candidate legs and both verify legs
+    * from it; property tests keep the stateless plan. Bulk is bounded:
+    * the audit guard caps the input at ≈[[AuditCap]] rows. */
   private[operators] def lshAuditFrame(docs: DataFrame, blockCols: Seq[String],
       nGram: Int, numPerms: Int): DataFrame = {
     graft.functions.VectorExprs.register(docs.sparkSession)
@@ -257,14 +261,7 @@ object Dedup {
       frameLeafKey: Option[Hints.LeafKey] = None): DataFrame = {
     val frame0 = lshAuditFrame(docs, Seq("lang", "source"),
       nGram = 1, numPerms = 32)
-    val frame = frameLeafKey match {
-      case Some(k) =>
-        val p = frame0.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        Hints.replaceLeaf(k, p)
-        p
-      case None => frame0
-    }
+    val frame = frameLeafKey.fold(frame0)(Hints.leaf(_)(persisted(frame0)))
     val cand = blockedLshCandidatesFromFrame(frame, Seq("lang", "source"),
       numPerms = 32, bandRows = 2, estMin = 0.5)
     val a = frame.select(col("doc_id").as("a_id"), col("tset").as("ta"))
@@ -301,14 +298,7 @@ object Dedup {
       frameLeafKey: Option[Hints.LeafKey] = None): DataFrame = {
     val frame0 = lshAuditFrame(docs, Seq("lang", "source"),
       nGram = 1, numPerms = 64)
-    val frame = frameLeafKey match {
-      case Some(k) =>
-        val p = frame0.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        Hints.replaceLeaf(k, p)
-        p
-      case None => frame0
-    }
+    val frame = frameLeafKey.fold(frame0)(Hints.leaf(_)(persisted(frame0)))
     val und = blockedLshCandidatesFromFrame(frame, Seq("lang", "source"),
       numPerms = 64, bandRows = 1, estMin = 0.0)
     // Both orientations from ONE traversal of the undirected pair set —
@@ -515,28 +505,15 @@ object Dedup {
     // legs below are different projections, so exchange reuse never
     // fires) — without a leaf the tokenize+shingle+distinct derivation
     // runs once per leg, corpus-linear each time. Fixture-backed callers
-    // pass setsLeafKey (Hints.replaceLeaf: rebuilt per construction —
-    // honest bench — displaced entry unpersisted, swept by
-    // evictAllMemos);
-    // ad-hoc callers (property tests on synthetic frames) omit it and
-    // keep the stateless plan. Measured solo at 100×, same session
-    // (rebuild-always semantics — every rep pays ONE derivation + the
-    // cache write): q_dedup_neardup 35.5 → 24.7 s, q_dedup_clusters 39.2 →
-    // 26.3 s, q_graph_cc unchanged (35.2 → 34.2 s — its edges are
-    // co-purchase pairs, no shingle verify). An unmanaged inline
-    // persist measured 11.4 s but that is the WARM-rep artifact of
-    // CacheManager plan-matching across constructions, plus an
-    // unevictable cache entry — rejected for the leaf discipline.
+    // pass setsLeafKey (a Hints.leaf, swept by evictAllMemos); ad-hoc
+    // callers (property tests on synthetic frames) omit it and keep the
+    // stateless plan. Measured solo at 100×, each rep paying one
+    // derivation + the cache write: q_dedup_neardup 35.5 → 24.7 s,
+    // q_dedup_clusters 39.2 → 26.3 s, q_graph_cc unchanged (35.2 →
+    // 34.2 s — its edges are co-purchase pairs, no shingle verify).
     val sets0 = withToks(Tables.spread(docs))
       .withColumn("tset", expr(shingles(nGram)))
-    val withSets = setsLeafKey match {
-      case Some(k) =>
-        val p = sets0.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        Hints.replaceLeaf(k, p)
-        p
-      case None => sets0
-    }
+    val withSets = setsLeafKey.fold(sets0)(Hints.leaf(_)(persisted(sets0)))
     val a = withSets.select(col("doc_id").as("a_id"), col("tset").as("ta"))
     val b = withSets.select(col("doc_id").as("b_id"), col("tset").as("tb"))
     // The prefilter must track the verify threshold, not assume the 0.7
@@ -605,9 +582,8 @@ object Dedup {
     // The delta/corpus split below filters this table two DIFFERENT
     // ways (doc_id%10 = vs ≠ 7) — distinct subtrees, so exchange reuse
     // never fires and the corpus-linear signature map ran once PER
-    // SIDE. Same single-consumer-leaf treatment as [[dedupLshSweep]]
-    // (Hints.replaceLeaf: rebuilt each construction, displaced entry
-    // unpersisted). Measured at 100× (same-session solo A/B):
+    // SIDE. Same single-consumer leaf as [[dedupLshSweep]]. Measured at
+    // 100× (same-session solo A/B):
     // 41.3 → 33.0 s (14.8× → 11.0×); sf0.1 TimeOne min 2.25 → 2.51 s
     // (+0.26 s cache write at the scale where one signature pass is
     // cheap — under the gate; kept for the 20 % at 100×, growing with
@@ -617,9 +593,8 @@ object Dedup {
     // (16 copies per doc), so the old bkt persist cached 16× the bytes
     // for the same saved signature computation; the banded explode
     // re-runs over the cache as a narrow map per consumer side.
-    val sigs = minhashSignatures(docs, 2, 32)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    Hints.replaceLeaf(Hints.leafKey(s, d, "incr-sigs", "documents"), sigs)
+    val sigs = Hints.leaf(s, d, "incr-sigs", "documents")(
+      persisted(minhashSignatures(docs, 2, 32)))
     val bkt = bucketsFromSigs(sigs, 32, 2)
     val n = bkt.filter(col("doc_id") % 10 === 7)
       .select(col("doc_id").as("new_id"), col("sig").as("nsig"),
@@ -1173,19 +1148,11 @@ object Dedup {
     * file's (mtime, length) fingerprint, so a fixture regeneration
     * invalidates the entry instead of serving stale labels; the registry
     * holds cached-leaf DataFrames, whose blocks the ContextCleaner
-    * reclaims once unreferenced.
-    *
-    * Accounting is asymmetric by design: [[dedupClusters]] always
-    * REBUILDS (and refreshes the leaf) so its bench time keeps measuring
-    * the full LSH→verify→propagate pipeline honestly, while
-    * [[dedupRepr]] CONSUMES the shared leaf (building it only when it
-    * runs standalone) and pays just its own join + window — the apply
-    * step's real marginal cost. */
-  private def labelKey(s: SparkSession, d: String): Hints.LeafKey =
-    Hints.leafKey(s, d, "labels", "documents")
-
+    * reclaims once unreferenced. Whichever of [[dedupClusters]],
+    * [[dedupRepr]] and [[dedupSplit]] runs first builds the leaf; the
+    * others pay just their own join or aggregate. */
   private def sharedLabels(s: SparkSession, d: String): DataFrame =
-    Hints.leaf(labelKey(s, d))(buildLabels(s, d))
+    Hints.leaf(s, d, "labels", "documents")(buildLabels(s, d))
 
   /** Round 15 (VERDICT r14 item 4): the labeling stage now runs
     * [[Graph.ccAdjacency]] — adjacency-leaf min-label propagation with
@@ -1212,7 +1179,7 @@ object Dedup {
     * (the contamination that inflates benchmarks); hashing each
     * CLUSTER keeps every near-dup family on one side by construction.
     * Both schemes are computed here side by side from the SAME shared
-    * checkpointed label leaf ([[labelKey]]), with singleton docs
+    * checkpointed label leaf ([[sharedLabels]]), with singleton docs
     * falling back to their own id (coalesce — labels only exist for
     * docs with at least one near-dup edge). The output pins the
     * argument numerically: n_leaky_naive counts clusters the doc-hash
@@ -1254,13 +1221,10 @@ object Dedup {
         col("n_leaky_naive"), col("n_leaky_grp"))
   }
 
-  def dedupClusters(s: SparkSession, d: String): DataFrame = {
-    val labels = buildLabels(s, d)
-    Hints.replaceLeaf(labelKey(s, d), labels)
-    labels
+  def dedupClusters(s: SparkSession, d: String): DataFrame =
+    sharedLabels(s, d)
       .select(col("id").as("doc_id"), col("lbl").as("canon_id"))
       .orderBy(col("doc_id").asc)
-  }
 
   /** Cluster-representative selection — the APPLY step of cluster-level
     * dedup, the keep/drop verdict an ingest gate consumes (the span-level
@@ -1269,7 +1233,7 @@ object Dedup {
     * in); everyone else points at the kept representative. The window
     * partitions by CLUSTER id, so partitions are cluster-sized regardless
     * of corpus size, and the cluster labels are the SHARED checkpointed
-    * leaf from [[labelKey]] — the same convergence-guarded propagation
+    * leaf from [[sharedLabels]] — the same convergence-guarded propagation
     * q_dedup_clusters materializes, consumed here instead of re-run. */
   def dedupRepr(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select(col("doc_id"), col("n_chars"))
@@ -1385,16 +1349,14 @@ object Dedup {
     // the md5-minhash map (md5 per shingle — this query's dominant
     // per-row cost) executing once per leg, with the join-key IsNotNull
     // pushdown re-deriving signatures in the scan filter on top. One
-    // persisted audit-cap-bounded frame per construction (replaceLeaf —
-    // rebuild-always, displaced entry unpersisted) serves both legs.
-    val base = withMd5Sigs(
-      withToks(Tables.spread(guarded))
-        .withColumn("tset", expr(shingles(2)))
-        .filter(size(col("tset")) > 0)
-        .select(col("doc_id"), col("lang"), col("source"), col("tset")),
-      "tset")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    Hints.replaceLeaf(Hints.leafKey(s, d, "esterr-base", "documents"), base)
+    // persisted audit-cap-bounded leaf serves both legs.
+    val base = Hints.leaf(s, d, "esterr-base", "documents")(persisted(
+      withMd5Sigs(
+        withToks(Tables.spread(guarded))
+          .withColumn("tset", expr(shingles(2)))
+          .filter(size(col("tset")) > 0)
+          .select(col("doc_id"), col("lang"), col("source"), col("tset")),
+        "tset")))
     val aCols = col("doc_id").as("a_id") +: col("lang").as("lang") +:
       col("source").as("source") +: col("tset").as("ta") +:
       (0 until MdPerms).map(i => col(s"s$i").as(s"a$i"))
@@ -1436,17 +1398,12 @@ object Dedup {
     // 8-perm signature per doc, THE dominant cost at scale) runs once
     // PER ARM. Lazy persist keeps construction job-free (the laziness
     // pin); the first arm's action populates the cache and the other two
-    // read it. replaceLeaf, not leaf: this leaf has ONE consumer, so
-    // every construction REBUILDS it — bench reps keep paying the
-    // signature stage (the honest-accounting discipline of
-    // [[dedupClusters]]) — while the superseded entry is unpersisted so
-    // long-lived sessions don't leak cached blocks. Measured at 100×
-    // (same-session solo A/B): 34.7 → 22.6 s (ratio 15.4× → 8.5×);
-    // sf0.1 TimeOne min 1.91 → 1.93 s — wash, as the leaf rule predicts
-    // for a re-referenced stream whose base-scale derivation is cheap.
-    val sigs = minhashMd5Sigs(Tables.documents(s, d))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    Hints.replaceLeaf(Hints.leafKey(s, d, "sweep-sigs", "documents"), sigs)
+    // read it. Measured at 100× (same-session solo A/B): 34.7 → 22.6 s
+    // (ratio 15.4× → 8.5×); sf0.1 TimeOne min 1.91 → 1.93 s — wash, as
+    // the leaf rule predicts for a re-referenced stream whose base-scale
+    // derivation is cheap.
+    val sigs = Hints.leaf(s, d, "sweep-sigs", "documents")(
+      persisted(minhashMd5Sigs(Tables.documents(s, d))))
     def cfg(r: Int): DataFrame = {
       val bands = (0 until MdPerms / r).map { b =>
         concat_ws(":", (lit(b.toString) +:
@@ -1541,15 +1498,14 @@ object Dedup {
     * discipline as [[minhashCandidates]]); verify is one
     * bit_count(xor) per candidate. */
   def dedupHamming(s: SparkSession, d: String): DataFrame = {
-    // Round 16: one persisted (doc_id, sig) table per construction — the
+    // Round 16: one persisted (doc_id, sig) leaf — the
     // final plan showed the simhash map running once per join leg (the
     // band join goes broadcast at fixture scale, so no AQE stage reuse)
     // PLUS a third evaluation inside the scan filter (the join keys'
     // inferred IsNotNull pushed below the project). Two longs per doc
-    // cached; replaceLeaf rebuild-always discipline.
-    val sigs = hammingSigs(Tables.documents(s, d))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    Hints.replaceLeaf(Hints.leafKey(s, d, "ham-sigs", "documents"), sigs)
+    // cached.
+    val sigs = Hints.leaf(s, d, "ham-sigs", "documents")(
+      persisted(hammingSigs(Tables.documents(s, d))))
     val bands = (0 until HamBands).map { k =>
       struct(lit(k.toLong).as("band_id"),
         shiftright(col("sig"), k * 8).bitwiseAND(255).as("bv"))

@@ -665,8 +665,7 @@ object Graph {
     * the same double rollup — unchanged, both algorithms compute the
     * same min-label fixpoint. */
   def graphCc(s: SparkSession, d: String): DataFrame =
-    ccAdjacency(s, copurchaseEdges(s, d, rebuild = true),
-      checkpointEdges = false)
+    ccAdjacency(s, copurchaseEdges(s, d), checkpointEdges = false)
       .groupBy(col("lbl")).agg(count(lit(1)).as("csize"))
       .groupBy(col("csize"))
       .agg(count(lit(1)).as("n_comps"))
@@ -784,14 +783,9 @@ object Graph {
     * cc/kcore/lift read one eagerly-checkpointed artifact instead of
     * re-running the ~26 s/100× explode+groupBy per query (PERF.md
     * finding 33; measured consumer warm cost at 100×: kcore
-    * 37.7 → 5.6 s). `rebuild = true` (the q_graph_cc path) re-derives
-    * and refreshes the memo — the honest-bench convention from
-    * Dedup.dedupClusters.
-    * Shared by [[graphKcore]] and [[graphCc]]. */
-  private[graft] def copurchaseEdges(s: SparkSession, d: String,
-      rebuild: Boolean = false): DataFrame =
-    (if (rebuild) Analytics.rebuildSupportedPairs(s, d)
-     else Analytics.supportedPairs(s, d))
+    * 37.7 → 5.6 s). Shared by [[graphKcore]] and [[graphCc]]. */
+  private[graft] def copurchaseEdges(s: SparkSession, d: String): DataFrame =
+    Analytics.supportedPairs(s, d)
       .select(Analytics.unpackA.as("a_pk"), Analytics.unpackB.as("b_pk"))
 
   def graphKcore(s: SparkSession, d: String, k: Int = 2,

@@ -27,11 +27,13 @@ import graft.Tables
   * (id + label / node + rank), so the row bound translates directly to a
   * build-side budget — see [[MaxBroadcastRows]] for the sizing rationale.
   *
-  * Hints also owns the registry of session-scoped shared leaves ([[leaf]],
-  * [[replaceLeaf]], [[evictAllMemos]]): every cached intermediate that
-  * several queries of one session reuse (the token, gram, label,
-  * supported-pairs and PCA leaves, the per-construction signature
-  * leaves) lives in one map under one key format ([[leafKey]]).
+  * Hints also owns the registry of session-scoped shared leaves: every
+  * cached intermediate that queries of one session reuse (the token,
+  * gram, label, supported-pairs and PCA leaves, the signature frames)
+  * lives in one map under one key format ([[leafKey]]), and [[leaf]] is
+  * the only way in: the first request builds, later ones read. Operators
+  * never rebuild a leaf to make a timing pay its derivation; a harness
+  * that wants cold numbers calls [[evictAllMemos]] before its pass.
   */
 object Hints {
   /** Max state rows that still get a broadcast hint. Was 2M through
@@ -195,18 +197,6 @@ object Hints {
     df
   }
 
-  /** [[leaf]]'s overwrite twin for callers that always REBUILD so their
-    * bench time keeps paying the derivation (Dedup.dedupClusters,
-    * Analytics.rebuildSupportedPairs, the per-construction signature
-    * leaves): installs `df` under `key`, unpersisting the displaced leaf
-    * and stale twins. */
-  def replaceLeaf(key: LeafKey, df: DataFrame): Unit = {
-    val cell = leaves.computeIfAbsent(key, _ => new Cell)
-    val old = cell.synchronized { val o = cell.df; cell.df = df; o }
-    if (old ne df) unpersistQuietly(old)
-    evictStale(key)
-  }
-
   private def evictStale(key: LeafKey): Unit =
     leaves.forEach { (k, cell) =>
       if (k != key && k.copy(fingerprint = key.fingerprint) == key &&
@@ -226,15 +216,17 @@ object Hints {
     out.result()
   }
 
-  /** Unpersist and forget every shared leaf. Used by graft.Headroom's
-    * ALL/ONLY sweeps between queries so each measurement starts from the
-    * cold-cache state a SOLO run would see: round 10 documented an
-    * in-sweep-vs-solo gap of up to ~1.6× (basket_pairs 43.1 vs 26.4 s at
-    * 100×, same day) caused by leaf-persisting neighbors holding
-    * executor memory — with eviction the sweep numbers are primary
-    * evidence, not conservative upper bounds. Removal is also what
-    * makes checkpointed leaves' RDD blocks collectable. Query paths
-    * never call this; their eviction stays per-key. */
+  /** Unpersist and forget every shared leaf. graft.Bench calls it at the
+    * start of each rep, so the first consumer of a leaf in a pass pays
+    * its build; graft.Headroom's ALL/ONLY sweeps call it between queries
+    * so each measurement starts from the cold-cache state a SOLO run
+    * would see: round 10 documented an in-sweep-vs-solo gap of up to
+    * ~1.6× (basket_pairs 43.1 vs 26.4 s at 100×, same day) caused by
+    * leaf-persisting neighbors holding executor memory — with eviction
+    * the sweep numbers are primary evidence, not conservative upper
+    * bounds. Removal is also what makes checkpointed leaves' RDD blocks
+    * collectable. Query paths never call this; their eviction stays
+    * per-key. */
   def evictAllMemos(): Unit =
     leaves.forEach { (k, cell) =>
       if (leaves.remove(k, cell)) unpersistQuietly(cell.df)

@@ -1419,36 +1419,21 @@ object Sim {
       .orderBy(col("dim").asc)
   }
 
-  /** Registry key of the PCA loadings leaf — dims-sized (64 rows), the
-    * "trained artifact" the projection query applies. Same discipline
-    * as the dedup label leaf and Analytics.supportedPairs:
-    * q_emb_pca_power — the trainer — always REBUILDS and refreshes the
-    * leaf (its bench time keeps measuring the full Gram build + power
-    * rounds honestly); q_emb_project consumes the shared leaf and pays
-    * only its own corpus-scale projection — the apply step's real
+  /** The PCA loadings leaf — dims-sized (64 rows), the "trained
+    * artifact" the projection query applies. q_emb_pca_power (the
+    * trainer) and q_emb_project (the scorer) share it, so the scorer
+    * pays only its own corpus-scale projection — the apply step's real
     * marginal cost (in production the loadings are one materialized
     * model every scorer broadcasts, not a pipeline each scorer
     * re-trains). Keyed on the embeddings file fingerprint so a fixture
-    * regeneration invalidates instead of serving stale loadings. */
-  private def pcaKey(s: SparkSession, d: String): Hints.LeafKey =
-    Hints.leafKey(s, d, "pca", "embeddings")
-
-  private def buildPcaLeaf(s: SparkSession, d: String): DataFrame =
-    // LAZY leaf: the caller's first action materializes it (the
-    // trainer's own count, or the scorer's broadcast build on a
-    // standalone miss). The dedup label leaf's lazy-leaf race note does not
-    // apply — every consumer references the leaf exactly once (a
-    // broadcast model join), never through a self-union.
-    Hints.checkpoint(embPcaPower(s, d), eager = false)
-
-  private[graft] def pcaLoadingsRebuild(s: SparkSession, d: String): DataFrame = {
-    val leaf = buildPcaLeaf(s, d)
-    Hints.replaceLeaf(pcaKey(s, d), leaf)
-    leaf
-  }
-
+    * regeneration invalidates instead of serving stale loadings.
+    * LAZY leaf: the caller's first action materializes it. The dedup
+    * label leaf's lazy-leaf race note does not apply — every consumer
+    * references the leaf exactly once (a broadcast model join), never
+    * through a self-union. */
   private[graft] def pcaLoadings(s: SparkSession, d: String): DataFrame =
-    Hints.leaf(pcaKey(s, d))(buildPcaLeaf(s, d))
+    Hints.leaf(s, d, "pca", "embeddings")(
+      Hints.checkpoint(embPcaPower(s, d), eager = false))
 
   /** Apply the learned PCA transform at corpus scale: project every
     * embedding onto [[embPcaPower]]'s dominant component — the map-only
@@ -1460,9 +1445,8 @@ object Sim {
     * floor-vs-truncate hazard on its sign. Oracle shares the power-
     * iteration CTE verbatim. */
   def embProject(s: SparkSession, d: String): DataFrame = {
-    // Round 15: the loadings come from the shared memo leaf (trainer
-    // rebuilds, scorer consumes — see [[pcaKey]]); standalone runs
-    // build it once on the miss.
+    // Round 15: the loadings come from the shared memo leaf (see
+    // [[pcaLoadings]]); standalone runs build it once on the miss.
     val v = pcaLoadings(s, d)
       .select(col("dim").cast("int").as("j"), col("loading_micro").as("lv"))
     Tables.embeddings(s, d)
@@ -1476,9 +1460,7 @@ object Sim {
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // rebuild-always accounting (the dedup label-leaf convention): the trainer
-    // measures the full Gram + power rounds and refreshes the leaf
-    "q_emb_pca_power" -> pcaLoadingsRebuild,
+    "q_emb_pca_power" -> pcaLoadings,
     "q_emb_project" -> embProject,
     "q_sim_mmr"     -> simMmr,
     "q_emb_coreset" -> simCoreset,

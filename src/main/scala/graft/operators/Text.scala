@@ -53,8 +53,7 @@ object Text {
     * corpus once and reading it 15 times. persist (MEMORY_AND_DISK_SER),
     * NOT checkpoint: persist is lazy, so query CONSTRUCTION stays
     * job-free (the PlanQualitySpec laziness pin) and the first consumer's
-    * action populates the cache — honest accounting, the same discipline
-    * as the dedup label leaf. Serialized blocks evict to disk under
+    * action populates the cache. Serialized blocks evict to disk under
     * pressure, so the leaf never pins unified memory the consumers'
     * hash aggregates need. Keyed by the documents file's (mtime, length)
     * fingerprint, so a fixture regeneration invalidates the entry

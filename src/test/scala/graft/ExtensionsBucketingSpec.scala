@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 
 /** Deployment-grade wiring: SparkSessionExtensions function injection and
@@ -10,7 +11,7 @@ import org.apache.spark.sql.functions._
   * suites share the JVM). */
 class ExtensionsBucketingSpec extends SparkSpec {
 
-  test("vec_dot is available via spark.sql.extensions injection") {
+  test("spark.sql.extensions injection installs every native function") {
     val shared = spark // materialize the shared session/context first
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
@@ -24,6 +25,19 @@ class ExtensionsBucketingSpec extends SparkSpec {
       val got = s.sql("SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
         .head().getDouble(0)
       assert(got == 11.0)
+      val registry = s.sessionState.functionRegistry
+      val names = functions.VectorExprs.functions.map(_._1)
+      assert(names.size == 11)
+      val missing = names.filterNot(n => registry.functionExists(FunctionIdentifier(n)))
+      assert(missing.isEmpty, s"not injected: $missing")
+      // register finds them all and installs nothing over them
+      val builders = names.map(n => registry.lookupFunctionBuilder(FunctionIdentifier(n)).get)
+      functions.VectorExprs.register(s)
+      val after = names.map(n => registry.lookupFunctionBuilder(FunctionIdentifier(n)).get)
+      assert(builders.zip(after).forall { case (a, b) => a eq b },
+        "register replaced an injected function")
+      assert(s.sql("SELECT size(minhash_sigs(array('a', 'b'), 4)) AS n")
+        .head().getInt(0) == 4)
     } finally {
       SparkSession.setDefaultSession(shared)
       SparkSession.setActiveSession(shared)

@@ -9,7 +9,7 @@ import org.apache.spark.storage.StorageLevel
 import graft.operators.Hints
 import graft.operators.Hints.LeafKey
 
-/** Pins the shared-leaf registry contract (Hints.leaf / replaceLeaf):
+/** Pins the shared-leaf registry contract (Hints.leaf):
   * a leaf is identified by (context, dir, name, fingerprint), and an
   * insert evicts only entries with the same (context, dir, name) and a
   * DIFFERENT fingerprint. Regression test for the round-10 advice
@@ -30,8 +30,8 @@ class MemoEvictionSpec extends SparkSpec {
     val dir = "/memo-spec/variants"
     val incr = LeafKey(1, dir, "incr-bkt", "fpA")
     val sweep = LeafKey(1, dir, "sweep-sigs", "fpA")
-    Hints.replaceLeaf(incr, df(1))
-    Hints.replaceLeaf(sweep, df(2))
+    Hints.leaf(incr)(df(1))
+    Hints.leaf(sweep)(df(2))
     assert(keysUnder(dir) === Set(incr, sweep),
       "sweep-sigs insert must not evict the incr-bkt leaf")
   }
@@ -40,8 +40,8 @@ class MemoEvictionSpec extends SparkSpec {
     val dir = "/memo-spec/refingerprint"
     val stale = df(1).persist()
     stale.count()
-    Hints.replaceLeaf(LeafKey(1, dir, "incr-bkt", "fpOLD"), stale)
-    Hints.replaceLeaf(LeafKey(1, dir, "incr-bkt", "fpNEW"), df(2))
+    Hints.leaf(LeafKey(1, dir, "incr-bkt", "fpOLD"))(stale)
+    Hints.leaf(LeafKey(1, dir, "incr-bkt", "fpNEW"))(df(2))
     assert(keysUnder(dir) === Set(LeafKey(1, dir, "incr-bkt", "fpNEW")),
       "regenerated fixture must displace the superseded leaf")
     assert(stale.storageLevel === StorageLevel.NONE,
