@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark entrypoint (driver contract). Prints ONE JSON line:
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}
   *
@@ -26,25 +24,17 @@ import org.apache.spark.sql.SparkSession
   * Each rep starts with `Hints.evictAllMemos()`, so within a pass the
   * first consumer of a shared leaf (in sorted query order) pays its build
   * and later consumers read it.
+  *
+  * Runs on [[Harness.session]] and times construction plus
+  * [[Harness.drain]], the full-row `noop` sink, for the warm-up and every
+  * timed rep. Numbers taken with `count()` (every snapshot before
+  * bench_full_r17) time pruned plans and do not compare with these.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = Harness.withStallTolerances(
-      SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Host-speed calibration (round 13): fixed CPU-bound probe before the
-    // warm-up and after the timed passes; the min rides the JSON line as
-    // calibration_s so cross-round absolutes can be drift-normalized.
-    val calibPre = Calibrate.measure("bench-pre")
+    val spark = Harness.session()
     val names = SparkEntry.queries.keys.toSeq.sorted
     // Warm-up pass at the smallest SF: compiles every query's generated
     // code and warms the JIT so the timed passes measure steady-state
@@ -52,7 +42,7 @@ object Bench {
     val warmDir = "/root/testdata/sf0.001"
     if (new java.io.File(warmDir).isDirectory)
       names.foreach { n =>
-        try SparkEntry.queries(n)(spark, warmDir).count()
+        try Harness.drain(SparkEntry.queries(n)(spark, warmDir))
         catch { case _: Throwable => () }
       }
     // A query that throws records -1 (BASELINE.md contract), never its
@@ -67,7 +57,7 @@ object Bench {
       for (name <- names) {
         val t0 = System.nanoTime()
         val ok =
-          try { SparkEntry.queries(name)(spark, sfDir).count(); true }
+          try { Harness.drain(SparkEntry.queries(name)(spark, sfDir)); true }
           catch { case e: Throwable =>
             System.err.println(s"[bench] FAIL $name: ${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
             false
@@ -80,10 +70,6 @@ object Bench {
       }
     }
     names.foreach(n => if (best.getOrElse(n, -1.0) < 0) failed += n)
-    val calib = math.min(calibPre, Calibrate.measure("bench-post"))
-    // all-core twin (round 14): catches aggregate-throughput drift the
-    // serial probe is blind to (see Calibrate.runParallel scaladoc)
-    val calibAll = Calibrate.runParallel()
     val load = try scala.io.Source.fromFile("/proc/loadavg").mkString.trim.split(" ").take(3).mkString(" ")
                catch { case _: Throwable => "" }
     def f3(d: Double): String = "%.3f".format(d)
@@ -99,7 +85,7 @@ object Bench {
       s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":{""" +
         shown.map { case (k, v) => "\"" + k + "\":" + f3(v) }.mkString(",") +
         s"""},"sf":"$sfDir","reps":$reps,"n_queries":${best.size},"n_failed":${failed.size},""" +
-        s""""omitted_fastest":${omitted.size},"omitted_sum":${f3(omitted.map(_._2).sum)},"calibration_s":${f3(calib)},"calibration_all_s":${f3(calibAll)},"calib_threads":${Calibrate.defaultParThreads},"loadavg":"$load"}"""
+        s""""omitted_fastest":${omitted.size},"omitted_sum":${f3(omitted.map(_._2).sum)},"cpus":${Harness.cpus},"loadavg":"$load"}"""
     var cut = sorted.size
     while (cut > 0 && fixedFmt(sorted.take(cut), sorted.drop(cut)).length > budget) cut -= 1
     val line = fixedFmt(sorted.take(cut), sorted.drop(cut))

@@ -1,17 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility (round 15): dump `.explain("formatted")` for named
   * declared queries to files — the plan evidence the optimization
   * rounds commit under plans/rN/ (judge checks plan claims against
   * these instead of running Spark).
   *
   * `runMain graft.ExplainDump <outDir> <suffix> q_a,q_b[,...] [dataDir]`
-  * writes `<outDir>/<query>_<suffix>.txt` per query. The session runs
-  * at local[$SPARK_GRAFT_CPUS] with AQE, like Bench, and additionally
-  * sets AQE's initialPartitionNum to 512, which Bench does not: shuffle
-  * partition counts in the dumps can differ from what the bench runs. */
+  * writes `<outDir>/<query>_<suffix>.txt` per query. The session is
+  * [[Harness.session]], the one Bench runs on, so the dumps show the
+  * plans Bench times. */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val outDir = new java.io.File(args(0))
@@ -19,14 +16,7 @@ object ExplainDump {
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val dir = args.lift(3).getOrElse("/root/testdata/sf0.1")
     outDir.mkdirs()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Harness.withStallTolerances(
-      SparkSession.builder().master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("ERROR")
     // SPARK_GRAFT_EXPLAIN_FINAL=1 executes the query first so the dump
     // shows the POST-AQE final plan (isFinalPlan=true) — the evidence tier
     // for claims like "AQE converts this static SMJ to broadcast at

@@ -1,21 +1,49 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared measurement-harness session settings (round 14, VERDICT r13
-  * item 8).
+/** The one measurement harness: the session every main except `Smoke`
+  * runs on, and the action every timed or warm-up run executes.
   *
-  * The round-13 100× sweep lost an executor to a G1 full-collection
-  * stall that outlasted the 10 s default local-mode heartbeat (Spark
-  * exit 56, HEARTBEAT_FAILURE, 63 min into the run); only Headroom got
-  * the stretched tolerances that session. Solo TimeOne brackets and
-  * Bench runs at 24g/100× are exposed to exactly the same stall, so the
-  * tolerances live here and every harness applies them — the same
-  * configuration an at-capacity production driver runs with. A
-  * measurement harness must survive the stall it is trying to measure.
+  * `session()` runs at `local[n]` with `n` shuffle partitions, AQE on,
+  * UTC and no UI. `n` is `SPARK_GRAFT_CPUS`, else the host's core count.
+  * The heartbeat and network timeouts are stretched because a G1
+  * full-collection stall on a big replica outlasted the 10 s default
+  * heartbeat and lost the local executor (Spark exit 56) in a 100×
+  * sweep: a measurement harness must survive the stall it measures.
+  *
+  * `drain(df)` writes every column of every row to the `noop` sink,
+  * which is what the perfbench harness times. `count()` lets Catalyst
+  * prune every column and most operators (windows, sorts, projections)
+  * from the plan, so it times a different, smaller query.
   */
 object Harness {
-  def withStallTolerances(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.executor.heartbeatInterval", "60s")
+  val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .flatMap(c => scala.util.Try(c.trim.toInt).toOption)
+    .filter(_ > 0)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  def session(logLevel: String = "WARN"): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.executor.heartbeatInterval", "60s")
       .config("spark.network.timeout", "600s")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
+  def drain(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** Wall seconds to build `df` and [[drain]] it. */
+  def time(df: => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    drain(df)
+    (System.nanoTime() - t0) / 1e9
+  }
 }

@@ -31,10 +31,9 @@ import org.apache.spark.sql.functions._
   * target/headroom_full.json — the full measured answer to "which plan
   * shapes grow faster than the data".
   *
-  * SPARK_GRAFT_SWEEP_GC=1 forces a full GC between queries (the
-  * in-sweep-inflation attribution experiment); the trailer always
-  * reports peak driver-heap occupancy (`peak_heap_gb`) so the 24 GB
-  * contract carries a measured number.
+  * Runs on [[Harness.session]] and times [[Harness.drain]], like Bench.
+  * The trailer reports peak driver-heap occupancy (`peak_heap_gb`) so
+  * the 24 GB contract carries a measured number.
   */
 object Headroom {
 
@@ -93,27 +92,14 @@ object Headroom {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/tmp/graft-sf1")
     val reps = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // G1-stall heartbeat/network tolerances ride the shared helper
-    // ([[Harness.withStallTolerances]] — round-13 finding, now applied
-    // to all three measurement harnesses).
-    val spark = Harness.withStallTolerances(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Size-driven partitioning for the big-replica runs: a fixed 32
-      // shuffle partitions puts ~2M-row hash-aggregate tasks on the 100×
-      // replica (execution-memory OOM on the PageRank edge distinct);
-      // with a high initial partition count AQE coalesces DOWN to the
-      // right size instead of being stuck too coarse — exactly the
-      // production config a real 100 TB job runs with. Small-SF plans
-      // coalesce back to a handful of partitions, so sf0.1 timings are
-      // unaffected.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
+    // Size-driven partitioning for the big-replica runs, which only this
+    // main makes: a fixed 32 shuffle partitions puts ~2M-row
+    // hash-aggregate tasks on the 100× replica (execution-memory OOM on
+    // the PageRank edge distinct); with a high initial partition count
+    // AQE coalesces DOWN to the right size instead of being stuck too
+    // coarse. Small-SF plans coalesce back to a handful of partitions.
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
     // Config contract, measured in round 8: the 100× replica's iterative
     // graph queries (PageRank/BFS/k-core over a 60M-edge leaf) need
     // ~0.75 GB/core of unified memory — 24 GB heap at local[32]. The 8 GB
@@ -132,11 +118,7 @@ object Headroom {
     }
     generate(spark, src, out, reps)
 
-    def time(fn: => Long): Double = {
-      val t0 = System.nanoTime(); fn; (System.nanoTime() - t0) / 1e9
-    }
     val all = sys.env.get("SPARK_GRAFT_HEADROOM_ALL").contains("1")
-    val sweepGc = sys.env.get("SPARK_GRAFT_SWEEP_GC").contains("1")
     // 4 Hz occupancy sampler (daemon). Round 13 (VERDICT r12 item 2 —
     // "attribute the 23.7 GB peak"): the whole-heap sample alone cannot
     // attribute anything, because under G1 the used-heap high-water mark
@@ -147,8 +129,7 @@ object Headroom {
     // Scala level but public in bytecode, so a measurement tool may read
     // them reflectively) — what Spark is actually HOLDING — and the
     // per-query reset lets headroom_full.json carry peak/exec/storage
-    // per query. The live set (post-GC used heap) is measured between
-    // queries under SPARK_GRAFT_SWEEP_GC=1.
+    // per query.
     val peakHeap = new java.util.concurrent.atomic.AtomicLong(0L)
     val qPeakHeap = new java.util.concurrent.atomic.AtomicLong(0L)
     val qPeakExec = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -193,16 +174,14 @@ object Headroom {
     }
     // warm-up: JIT + codegen on the small fixture
     names.foreach { n =>
-      try SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count()
+      try Harness.drain(SparkEntry.queries(n)(spark, "/root/testdata/sf0.001"))
       catch { case _: Throwable => () }
     }
     operators.Hints.evictAllMemos()
     val results = scala.collection.mutable.ArrayBuffer.empty[(String, Double, Double)]
     // per-query memory attribution: (peak heap, peak exec pool, peak
-    // storage pool) during the query's reps, and — under the GC flag —
-    // the post-GC LIVE SET after its leaves are evicted (what the query
-    // permanently added; a growing series here is the leak signature).
-    val memRows = scala.collection.mutable.Map.empty[String, (Double, Double, Double, Double)]
+    // storage pool) during the query's reps
+    val memRows = scala.collection.mutable.Map.empty[String, (Double, Double, Double)]
     val failedQ = scala.collection.mutable.ArrayBuffer.empty[String]
     def gb(x: Long): Double = x / (1024.0 * 1024 * 1024)
     // Between-REP reclaim (VERDICT r13 item 3): a finished rep's
@@ -228,10 +207,10 @@ object Headroom {
       sampleOnce()
       try {
         // min of 2 reps on each side, interleaved, small side first
-        val s1 = time(q(spark, src).count()); reclaim()
-        val b1 = time(q(spark, out).count()); reclaim()
-        val s2 = time(q(spark, src).count()); reclaim()
-        val b2 = time(q(spark, out).count())
+        val s1 = Harness.time(q(spark, src)); reclaim()
+        val b1 = Harness.time(q(spark, out)); reclaim()
+        val s2 = Harness.time(q(spark, src)); reclaim()
+        val b2 = Harness.time(q(spark, out))
         val (s, b) = (math.min(s1, s2), math.min(b1, b2))
         results += ((n, s, b))
         if (!all)
@@ -250,20 +229,12 @@ object Headroom {
       // via executor memory pressure. Within-query reps stay warm:
       // that is the same min-of-2 protocol the solo A/Bs run.
       operators.Hints.evictAllMemos()
-      // SPARK_GRAFT_SWEEP_GC=1 (round 12): force a full GC after the
-      // eviction, so the NEXT query starts from a compacted heap — the
-      // attribution experiment for the residual in-sweep-vs-solo
-      // inflation on leaf-free heavyweights (BASELINE.md round-11
-      // attributes it to JVM/GC/page-cache pressure; this flag tests
-      // the GC share of that claim directly).
-      if (sweepGc) { System.gc(); Thread.sleep(200) }
-      val live = if (sweepGc) gb(memBean.getHeapMemoryUsage.getUsed) else -1.0
-      memRows(n) = (gb(qPeakHeap.get), gb(qPeakExec.get), gb(qPeakStor.get), live)
+      memRows(n) = (gb(qPeakHeap.get), gb(qPeakExec.get), gb(qPeakStor.get))
     }
     if (all) {
       val lines = results.map { case (n, s, b) =>
-        val (ph, pe, ps, lv) = memRows.getOrElse(n, (-1.0, -1.0, -1.0, -1.0))
-        f"""  "$n": {"src_s":$s%.3f,"scaled_s":$b%.3f,"ratio":${b / s}%.2f,"peak_gb":$ph%.2f,"exec_gb":$pe%.2f,"stor_gb":$ps%.2f,"live_gb":$lv%.2f}""" }
+        val (ph, pe, ps) = memRows.getOrElse(n, (-1.0, -1.0, -1.0))
+        f"""  "$n": {"src_s":$s%.3f,"scaled_s":$b%.3f,"ratio":${b / s}%.2f,"peak_gb":$ph%.2f,"exec_gb":$pe%.2f,"stor_gb":$ps%.2f}""" }
       val fw = new java.io.FileWriter("target/headroom_full.json")
       fw.write(lines.mkString("{\n", ",\n", "\n}\n")); fw.close()
       results.sortBy { case (_, s, b) => -(b / s) }.take(15).foreach {
@@ -288,9 +259,7 @@ object Headroom {
     val maxStor = if (memRows.isEmpty) -1.0 else memRows.values.map(_._3).max
     System.gc(); Thread.sleep(300)
     val liveEnd = memBean.getHeapMemoryUsage.getUsed / (1024.0 * 1024 * 1024)
-    val calib = Calibrate.measure("headroom-post")
-    val calibAll = Calibrate.runParallel()
-    println(f"""{"metric":"headroom","reps":$reps,"n_queries":${sorted.size},"n_failed":${failedQ.size},"median_ratio":$median%.2f,"p90_ratio":$p90%.2f,"max_ratio":${sorted.last}%.2f,"sweep_gc":$sweepGc,"peak_heap_gb":$peakHeapGb%.1f,"max_exec_gb":$maxExec%.2f,"max_stor_gb":$maxStor%.2f,"live_end_gb":$liveEnd%.2f,"calibration_s":$calib%.3f,"calibration_all_s":$calibAll%.3f,"calib_threads":${Calibrate.defaultParThreads}}""")
+    println(f"""{"metric":"headroom","reps":$reps,"n_queries":${sorted.size},"n_failed":${failedQ.size},"median_ratio":$median%.2f,"p90_ratio":$p90%.2f,"max_ratio":${sorted.last}%.2f,"peak_heap_gb":$peakHeapGb%.1f,"max_exec_gb":$maxExec%.2f,"max_stor_gb":$maxStor%.2f,"live_end_gb":$liveEnd%.2f}""")
     if (failedQ.nonEmpty) println(s"""{"failed":${failedQ.mkString("[\"", "\",\"", "\"]")}}""")
     spark.stop()
   }

@@ -291,14 +291,15 @@ object Dedup {
     * unioning both orientations of the undirected pair stream. */
   def dedupContainLsh(s: SparkSession, d: String): DataFrame =
     dedupContainLshOn(auditSample(Tables.documents(s, d),
-      Tables.rowCount(s, d, "documents"), "doc_id"),
-      Some(Hints.leafKey(s, d, "clsh-frame", "documents")))
+      Tables.rowCount(s, d, "documents"), "doc_id"))
 
-  def dedupContainLshOn(docs: DataFrame,
-      frameLeafKey: Option[Hints.LeafKey] = None): DataFrame = {
-    val frame0 = lshAuditFrame(docs, Seq("lang", "source"),
+  /** The frame is not persisted: at sf0.1 on 4 cores a persisted frame
+    * leaf made the cold run slower in 5 of 5 interleaved A/B pairs (by
+    * 0.04-1.25 s) and won the warm runs in only 3 of 5, while the
+    * 32-perm Jaccard twin's leaf won 4 of 5. */
+  def dedupContainLshOn(docs: DataFrame): DataFrame = {
+    val frame = lshAuditFrame(docs, Seq("lang", "source"),
       nGram = 1, numPerms = 64)
-    val frame = frameLeafKey.fold(frame0)(Hints.leaf(_)(persisted(frame0)))
     val und = blockedLshCandidatesFromFrame(frame, Seq("lang", "source"),
       numPerms = 64, bandRows = 1, estMin = 0.0)
     // Both orientations from ONE traversal of the undirected pair set —

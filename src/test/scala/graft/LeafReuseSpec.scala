@@ -20,7 +20,7 @@ class LeafReuseSpec extends SparkSpec {
   test("a second construction still reads the persisted signature leaves") {
     Hints.evictAllMemos()
     val names = Seq("q_dedup_hamming", "q_dedup_lsh_sweep", "q_dedup_incr",
-      "q_dedup_est_err", "q_dedup_jaccard_lsh", "q_dedup_contain_lsh")
+      "q_dedup_est_err", "q_dedup_jaccard_lsh")
     val counts = names.map(n => (n, cachedRelations(n), cachedRelations(n)))
     val lost = counts.filter { case (_, first, second) =>
       first == 0 || second == 0 }

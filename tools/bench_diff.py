@@ -11,38 +11,10 @@ dominated by fixed job-scheduling overhead, from tripping the gate on
 scheduler noise.
 
 Usage:
-    python3 tools/bench_diff.py \
-        [--calib PREV_S:CURR_S[:PREV_ALL:CURR_ALL]] \
-        <prev_full.json> <curr_full.json> [report_out]
+    python3 tools/bench_diff.py <prev_full.json> <curr_full.json> [report_out]
 
---calib normalizes the CURRENT run by host-speed ratios measured by
-graft.Calibrate (the calibration_s / calibration_all_s fields of the two
-runs' JSON trailers). A slower host inflates CURR_S, so dividing it out
-compares plans, not machines (round 14, VERDICT r13 item 7).
-
-TWO-AXIS MODEL (round 15, VERDICT r14 item 2): the serial probe alone
-cannot explain same-day total swings — r14's three same-build benches
-read 225.7/201.0/193.9 s at serial 1.224/1.190/1.381 s, i.e. totals
-drift while single-core speed is flat, because the host loses AGGREGATE
-throughput (neighbor VMs, SMT/memory-bandwidth contention) that one
-thread cannot see. With both probes given, the two ratios BRACKET the
-true host factor for any query (a query's sensitivity to contention
-lies between "pure serial dependency chain" and "all cores saturated"):
-
-    curr_serial_norm = curr * (PREV_S  / CURR_S)
-    curr_allcore_norm = curr * (PREV_ALL / CURR_ALL)
-
-A query is flagged REGRESSION only if it trips the gate under BOTH
-normalizations (then no host-drift hypothesis inside the bracket can
-explain it); "improved" likewise requires both. The report prints the
-geometric mean of the two normalized values as the point estimate and
-the bracket spread as the residual — when the spread exceeds the gate
-width itself, the line is labeled HOST-AMBIGUOUS instead of regressed.
-
-With the legacy single pair, behavior is unchanged (serial-only axis).
-Rounds before r13 have no recorded probe; the measured idle reference
-for this host (1.30-1.73 s, BASELINE.md round 13) is the documented
-best-effort anchor for them, labeled as such in any committed table.
+Both maps must come from the same host and the same timed action: the
+gate compares plans only when the machine is held fixed.
 
 Exit 1 on regression (or on a query that failed: -1 marker), 0 otherwise.
 A query present only in prev counts as REMOVED (reported, not fatal —
@@ -56,17 +28,6 @@ ABS_FLOOR_S = 0.3
 
 def main():
     args = sys.argv[1:]
-    calib_s = 1.0   # serial-axis ratio prev/curr
-    calib_a = None  # all-core-axis ratio prev/curr (None = single-axis)
-    if args and args[0] == "--calib":
-        parts = [float(x) for x in args[1].split(":")]
-        if len(parts) not in (2, 4):
-            print("--calib wants PREV_S:CURR_S or PREV_S:CURR_S:PREV_ALL:CURR_ALL")
-            return 2
-        calib_s = parts[0] / parts[1]
-        if len(parts) == 4:
-            calib_a = parts[2] / parts[3]
-        args = args[2:]
     if len(args) < 2:
         print(__doc__)
         return 2
@@ -84,24 +45,10 @@ def main():
         return {k: float(v) for k, v in obj.items()}
 
     prev = load(args[0])
-    curr_raw = load(args[1])
-    axes = [calib_s] if calib_a is None else [calib_s, calib_a]
-    # per-axis normalized current maps (failure markers stay -1)
-    norms = [{k: (v * ax if v >= 0 else v) for k, v in curr_raw.items()}
-             for ax in axes]
-    # point estimate: geometric mean across axes (equals the single axis
-    # when only one is given)
-    def gmean(vals):
-        p = 1.0
-        for v in vals:
-            p *= v
-        return p ** (1.0 / len(vals))
-    curr = {k: (gmean([n[k] for n in norms]) if curr_raw[k] >= 0 else -1.0)
-            for k in curr_raw}
+    curr = load(args[1])
     out = open(args[2], "w") if len(args) > 2 else sys.stdout
 
     regressions, failures, improved, removed, new = [], [], [], [], []
-    ambiguous = []
     for q in sorted(set(prev) | set(curr)):
         if q not in curr:
             removed.append(q)
@@ -113,42 +60,21 @@ def main():
         if curr[q] < 0:
             failures.append(q)
             continue
-        def worse(c):
-            return p > 0 and c > p * RATIO_GATE and c - p > ABS_FLOOR_S
-        def better(c):
-            return p > 0 and p > c * RATIO_GATE and p - c > ABS_FLOOR_S
-        per_axis = [n[q] for n in norms]
-        if all(worse(c) for c in per_axis):
-            regressions.append((q, p, curr[q]))
-        elif any(worse(c) for c in per_axis):
-            # inside the host-drift bracket: one axis explains it away
-            ambiguous.append((q, p, min(per_axis), max(per_axis)))
-        elif all(better(c) for c in per_axis):
-            improved.append((q, p, curr[q]))
+        c = curr[q]
+        if p > 0 and c > p * RATIO_GATE and c - p > ABS_FLOOR_S:
+            regressions.append((q, p, c))
+        elif p > 0 and p > c * RATIO_GATE and p - c > ABS_FLOOR_S:
+            improved.append((q, p, c))
 
     tot_p = sum(v for v in prev.values() if v >= 0)
     tot_c = sum(v for v in curr.values() if v >= 0)
     print(f"# bench diff: {args[0]} -> {args[1]}", file=out)
-    if calib_a is not None:
-        tots = [sum(v for v in n.values() if v >= 0) for n in norms]
-        print(f"two-axis calibration: serial x {calib_s:.4f}, "
-              f"all-core x {calib_a:.4f}; normalized totals "
-              f"serial {tots[0]:.1f}s / all-core {tots[1]:.1f}s "
-              f"(residual {abs(tots[0]-tots[1]):.1f}s); gate requires "
-              f"regression under BOTH axes", file=out)
-    elif calib_s != 1.0:
-        print(f"calibration-normalized: curr x {calib_s:.4f} "
-              f"(prev_calib/curr_calib)", file=out)
     print(f"total: {tot_p:.1f}s -> {tot_c:.1f}s "
           f"({len(prev)} -> {len(curr)} queries)", file=out)
     for q, p, c in sorted(regressions, key=lambda t: t[1] - t[2]):
         print(f"REGRESSION {q}: {p:.3f}s -> {c:.3f}s ({c/p:.1f}x)", file=out)
     for q in failures:
         print(f"FAILED {q}: -1 in current run", file=out)
-    for q, p, lo, hi in sorted(ambiguous, key=lambda t: t[1] - t[3]):
-        print(f"HOST-AMBIGUOUS {q}: {p:.3f}s -> [{lo:.3f}, {hi:.3f}]s "
-              f"(regressed on one axis only — host bracket covers it)",
-              file=out)
     for q, p, c in sorted(improved, key=lambda t: t[2] - t[1]):
         print(f"improved {q}: {p:.3f}s -> {c:.3f}s", file=out)
     for q in removed:
@@ -157,8 +83,7 @@ def main():
         print(f"new {q}: {c:.3f}s", file=out)
     if not regressions and not failures:
         print("OK: no per-query regression "
-              f"(gate: >{RATIO_GATE}x and >{ABS_FLOOR_S}s"
-              + (", both axes" if calib_a is not None else "") + ")",
+              f"(gate: >{RATIO_GATE}x and >{ABS_FLOOR_S}s)",
               file=out)
     if out is not sys.stdout:
         out.close()

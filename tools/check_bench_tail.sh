@@ -38,6 +38,7 @@ if families is None:
     sys.exit(1)
 line_len = len(json.dumps(parsed, separators=(",", ":")))
 print(f"OK: parsed bench line: total={parsed['value']}s n={parsed['n_queries']} "
+      f"n_failed={parsed['n_failed']} "
       f"shown={len(parsed['queries'])} omitted={parsed['omitted_fastest']} "
       f"(~{line_len}B)")
 print(f"OK: families line: {len(families['totals'])} shown, "
