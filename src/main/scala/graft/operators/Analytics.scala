@@ -1224,7 +1224,7 @@ object Analytics {
         "AS BIGINT) AS STRING), 1, 1) AS BIGINT)").as("digit"))
       .groupBy(col("digit")).agg(count(lit(1)).as("n"))
     val tot = cnt.agg(sum(col("n")).as("total"))
-    broadcast(exp).join(cnt, Seq("digit"), "left")
+    exp.join(broadcast(cnt), Seq("digit"), "left")
       .na.fill(0L, Seq("n"))
       .crossJoin(broadcast(tot))
       .withColumn("obs_ppm", expr("n * 1000000 div total"))

@@ -674,287 +674,34 @@ object Dedup {
   private[graft] val SigPerms = 32
   private[graft] val SigBands = 2
 
-  /** Deterministic location of the STORED corpus signature/bucket state
-    * for fixture `d`: `graft-sigstate-<fixture-hash>-<version-hash>`,
-    * where the version hash folds the signing parameters, the state
-    * format version AND the documents fingerprint. A regenerated fixture
-    * or a parameter/format change gets fresh state; an unchanged one
-    * reuses what an earlier run (even a different JVM) wrote — state
-    * survives the session, which is the point. The fixture hash is a
-    * separate prefix so superseded versions of the SAME fixture are
-    * enumerable and reclaimable (see [[evictStaleSigState]]). */
-  def sigStatePath(s: SparkSession, d: String): String = {
-    def md5(x: String) = java.security.MessageDigest.getInstance("MD5")
-      .digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val ver = s"g${SigGram}p${SigPerms}b${SigBands}v$SigStateVersion@" +
-      Tables.pathFingerprint(s, s"$d/documents.parquet")
-    s"${sys.props("java.io.tmpdir")}/graft-sigstate-${md5(d)}-${md5(ver)}"
-  }
+  /** The STORED corpus signature/bucket state of fixture `d`
+    * ([[SegmentStore]] kind `sigstate`, keyed on the signing parameters,
+    * [[SigStateVersion]] and the documents fingerprint). Its base build
+    * is the INGEST-TIME signature job: the corpus side's minhash
+    * signatures + LSH buckets, clustered by (band_id, bucket) so the
+    * delta join scans co-located collision groups, written once per
+    * corpus version — never per ingest batch. At 100 TB this is the
+    * table a catalog serves (bucketBy into a warehouse table; parquet
+    * here keeps the artifact engine-neutral). */
+  private[graft] def sigStore(s: SparkSession, d: String): SegmentStore =
+    new SegmentStore(s, "sigstate", d,
+        s"g${SigGram}p${SigPerms}b${SigBands}v$SigStateVersion", "documents",
+        "doc_id", Seq("band_id", "bucket"),
+        Seq("doc_id", "sig", "band_id", "bucket")) {
+      protected def build(stage: String, base: String): Unit =
+        rows(minhashBuckets(Tables.documents(s, d).filter(col("doc_id") % 10 =!= 7),
+            SigGram, SigPerms, SigBands))
+          .write.mode("overwrite").parquet(base)
+    }
 
-  /** Committed segment dirs under a state root, ascending by number. A
-    * segment is visible only if its parquet commit marker exists — and
-    * since segments are PUBLISHED by atomic rename (below), a listed
-    * segment is always whole. */
-  private[graft] def sigSegments(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[(Int, org.apache.hadoop.fs.Path)] =
-    if (!fs.exists(root)) Nil
-    else fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("seg="))
-      .map(st => (st.getPath.getName.stripPrefix("seg=").toInt, st.getPath))
-      .filter { case (_, p) =>
-        fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")) }
-      .sortBy(_._1)
-
-  /** Publish a staged directory by ATOMIC rename into `dest`. Staging +
-    * rename (instead of writing into the final path) is what makes the
-    * state safe under concurrent writers: two JVMs racing the same
-    * missing state each write a private `.stage-*` dir, exactly one
-    * rename wins, the loser deletes its stage — a reader can never
-    * observe a half-written or mid-overwrite directory. Returns whether
-    * THIS call's rename won. (Local-FS state ⇒ nio ATOMIC_MOVE is
-    * available; an object-store deployment would swap this for a
-    * rename-capable committer or a lock file, same contract.) */
-  private[operators] def publishDir(fs: org.apache.hadoop.fs.FileSystem,
-      tmp: org.apache.hadoop.fs.Path,
-      dest: org.apache.hadoop.fs.Path): Boolean =
-    try {
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(tmp.toUri.getPath),
-        java.nio.file.Paths.get(dest.toUri.getPath),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      true
-    } catch { case _: java.io.IOException => fs.delete(tmp, true); false }
-
-  private[operators] def newStagePath(path: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      path + ".stage-" + java.util.UUID.randomUUID().toString.take(8))
-
-  /** One segment's rows: signatures + LSH buckets for `docs`, clustered
-    * by (band_id, bucket) so the delta join scans co-located collision
-    * groups, plus the tombstone flag (false for real signatures). */
-  private def sigRows(docs: DataFrame): DataFrame =
-    minhashBuckets(docs, SigGram, SigPerms, SigBands)
-      .withColumn("tomb", lit(false))
-      .repartition(docs.sparkSession.sessionState.conf.numShufflePartitions,
-        col("band_id"), col("bucket"))
-
-  /** Reclaim SUPERSEDED state for fixture `d`: every sibling
-    * `graft-sigstate-<fixture-hash>-*` dir whose version hash differs
-    * from the current key is a dead artifact (older fingerprint, older
-    * parameters or format) that nothing will ever read again — delete
-    * it, plus any orphaned `.stage-*` dirs a crashed writer left. This
-    * mirrors the Hints leaf registry's eviction: without it every fixture
-    * regeneration and every parameter change would leak a full corpus
-    * signature table into java.io.tmpdir forever. */
-  private[graft] def evictStaleSigState(s: SparkSession, d: String,
-      current: String): Unit = {
-    val cur = new java.io.File(current)
-    val prefix = cur.getName.split("-").init.mkString("-") + "-"
-    Option(cur.getParentFile.listFiles()).getOrElse(Array.empty)
-      .filter { f =>
-        val n = f.getName
-        f.isDirectory && n != cur.getName &&
-          (n.startsWith(prefix) || n.startsWith(cur.getName + ".stage-"))
-      }
-      .foreach { f =>
-        val p = new org.apache.hadoop.fs.Path(f.getAbsolutePath)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      }
-  }
-
-  /** The INGEST-TIME signature job: computes the corpus side's minhash
-    * signatures + LSH buckets once and stores them as the BASE segment
-    * (`seg=00000`) of a persisted parquet artifact. At 100 TB this is
-    * the table a catalog serves (bucketBy into a warehouse table;
-    * parquet + repartition here keeps the artifact engine-neutral), and
-    * it is written once per corpus version — never per ingest batch.
-    * Later ingest runs extend it with delta segments
-    * ([[appendSigState]]) and fold them back down ([[compactSigState]]).
-    * Visibility is two-phase: the job writes into a process-unique
-    * `.stage-*` dir and publishes by atomic rename ([[publishDir]]), so
-    * a crashed or racing writer leaves nothing a reader can trust. */
-  def writeSigState(s: SparkSession, d: String, path: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val tmp = newStagePath(path)
-    sigRows(Tables.documents(s, d).filter(col("doc_id") % 10 =!= 7))
-      .write.mode("overwrite").parquet(s"$tmp/seg=00000")
-    if (publishDir(fs, tmp, root)) evictStaleSigState(s, d, path)
-  }
-
-  /** Ingest ONE corpus delta into the stored state as a NEW segment —
-    * the multi-run lifecycle writeSigState alone lacks: `deltaDocs` are
-    * signed (narrow, O(delta) — the corpus is NOT re-read) and
-    * `tombstoneIds` land as tombstone rows, so a later read sees
-    * latest-segment-wins per doc_id ([[readSigState]]). Each append is
-    * O(delta) work publishing an immutable segment by atomic rename —
-    * the LSM discipline: ingest never rewrites the corpus-sized base,
-    * and read amplification from accumulated segments is reclaimed by
-    * [[compactSigState]], not by slowing down the write path. */
+  /** Ingest ONE corpus delta into the stored state as a new segment:
+    * `deltaDocs` are signed (narrow, O(delta) — the corpus is NOT
+    * re-read) and `tombstoneIds` land as tombstone rows, so a later read
+    * sees latest-segment-wins per doc_id. */
   def appendSigState(s: SparkSession, d: String, deltaDocs: DataFrame,
-      tombstoneIds: Seq[Long] = Nil): Unit = {
-    val path = sigStatePath(s, d)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (sigSegments(fs, root).isEmpty) writeSigState(s, d, path)
-    val signed = sigRows(deltaDocs)
-    val seg =
-      if (tombstoneIds.isEmpty) signed
-      else {
-        import s.implicits._
-        signed.unionByName(tombstoneIds.toDF("doc_id")
-          .withColumn("sig", lit(null).cast(signed.schema("sig").dataType))
-          .withColumn("band_id", lit(null).cast("long"))
-          .withColumn("bucket", lit(null).cast("long"))
-          .withColumn("tomb", lit(true)))
-      }
-    // Publish under the next free segment number; on a lost race
-    // (concurrent appender took it) re-list and retry — appends commute,
-    // they only need distinct slots.
-    var attempts = 0
-    var published = false
-    while (!published && attempts < 5) {
-      // Guarded head + stage-dir cleanup: the ADVICE-r13/r14 hardening
-      // applied to the ANN twin (Sim.appendAnnState), carried here —
-      // a concurrent fingerprint-change reclaim can empty the root
-      // mid-append, and a mid-write exception must not leak .stage-*.
-      val segs = sigSegments(fs, root)
-      require(segs.nonEmpty,
-        s"sig state under $path was reclaimed mid-append (corpus version " +
-          "changed concurrently); re-run the ingest against the new state")
-      val next = segs.last._1 + 1
-      val tmp = newStagePath(path)
-      try {
-        seg.write.mode("overwrite").parquet(tmp.toString)
-        published = publishDir(fs, tmp,
-          new org.apache.hadoop.fs.Path(root, f"seg=$next%05d"))
-      } finally if (fs.exists(tmp)) fs.delete(tmp, true)
-      attempts += 1
-    }
-    require(published, s"appendSigState lost $attempts publish races under $path")
-    // Round 15 (VERDICT r14 item 7): write-time auto-compaction, the ANN
-    // twin's byte-aware gate verbatim (Sim.annCompactDue — live count
-    // above the small bound AND delta bytes justifying a base rewrite,
-    // or the hard listing-width cap): the 100× A/B (BASELINE.md round 15,
-    // "Dedup sig-state segments") measured the
-    // multi-segment read paying a corpus shuffle per action before the
-    // anti-join read path landed; after it, reads are flat in segment
-    // count while deltas stay broadcastable, so compaction's remaining
-    // job is bounding listing width and delta accumulation — exactly
-    // what the ratio gate expresses. Probe-scale deltas (0.3% of base)
-    // never trigger a rewrite; a backfill-scale delta stream does.
-    if (Sim.annCompactDue(fs, root)) compactSigState(s, d)
-  }
-
-  /** Fold every live segment into ONE compacted segment and drop the
-    * dead ones — the state-growth bound for a corpus ingested across
-    * many runs: without it reads pay one parquet scan per historical
-    * append forever. The merged view ([[readSigState]]) is rewritten
-    * clustered by (band_id, bucket), published as the next segment with
-    * a `_COMPACT` marker (readers ignore everything older), then the
-    * superseded segments are deleted. Crash-safe at every step: the
-    * marker rides inside the atomically-renamed dir, so a crash before
-    * publish leaves the old segments authoritative, and a crash after
-    * publish merely delays the deletes to the next compaction.
-    * (A shared-reader deployment would defer the deletes by a grace
-    * period; this state is per-host tmpdir.) */
-  def compactSigState(s: SparkSession, d: String): Unit = {
-    val path = sigStatePath(s, d)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val segs = sigSegments(fs, root)
-    if (segs.size <= 1) return
-    val next = segs.last._1 + 1
-    val tmp = newStagePath(path)
-    // Marker through the Hadoop FileSystem API + stage-dir cleanup on
-    // any mid-compaction failure — the ADVICE-r13/r14 hardening applied
-    // to the ANN twin (Sim.compactAnnState), carried here: the java.nio
-    // call resolved against the LOCAL filesystem (wrong store when the
-    // Hadoop FS is non-local), and a mid-write exception leaked .stage-*.
-    try {
-      readSigState(s, d).withColumn("tomb", lit(false))
-        .repartition(s.sessionState.conf.numShufflePartitions,
-          col("band_id"), col("bucket"))
-        .write.mode("overwrite").parquet(tmp.toString)
-      fs.create(new org.apache.hadoop.fs.Path(tmp, "_COMPACT")).close()
-      if (publishDir(fs, tmp, new org.apache.hadoop.fs.Path(root, f"seg=$next%05d")))
-        segs.foreach { case (_, p) => fs.delete(p, true) }
-    } finally if (fs.exists(tmp)) fs.delete(tmp, true)
-  }
-
-  /** The LIVE merged view of the stored signature state: segments from
-    * the last compaction point forward, latest-segment-wins per doc_id,
-    * tombstones dropped. The single-segment case (fresh state, or just
-    * compacted — the steady state) short-circuits to a plain clustered
-    * scan, plan-identical to the pre-segmented artifact, so the
-    * certified q_dedup_incr_stored cost is unchanged; only a state with
-    * UNcompacted appends pays the merge (per-doc max-segment join), and
-    * that read amplification is exactly what [[compactSigState]]
-    * reclaims. First touch of a corpus version writes the base segment
-    * (the one-time ingest job). */
-  private[graft] def readSigState(s: SparkSession, d: String): DataFrame = {
-    val path = sigStatePath(s, d)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (sigSegments(fs, root).isEmpty) writeSigState(s, d, path)
-    val segs = sigSegments(fs, root)
-    require(segs.nonEmpty, s"sig-state ingest failed to publish under $path")
-    val live = segs.drop(segs.lastIndexWhere { case (_, p) =>
-      fs.exists(new org.apache.hadoop.fs.Path(p, "_COMPACT")) } max 0)
-    val cols = Seq(col("doc_id"), col("sig"), col("band_id"), col("bucket"))
-    if (live.size == 1)
-      s.read.parquet(live.head._2.toString)
-        .filter(!col("tomb")).select(cols: _*)
-    else {
-      // Round 15 (guide §3.2; BASELINE.md round 15 "Dedup sig-state
-      // segments", 100×): the old latest-wins
-      // — union all live segments, groupBy doc_id → max(seg), join back
-      // — SHUFFLES THE CORPUS-SIZED BASE twice because 3 MB of delta
-      // arrived (base 1.29 GB, deltas 3.5 MB; multi-segment reads
-      // 22–34 s vs 26.6 s compacted at heavy noise, and the measuring run
-      // itself filled the disk with the reads' shuffle files). Deltas
-      // are broadcastable by construction (bounded ingest batches), so
-      // while their BYTES stay under [[SigDeltaBcBytes]] the merged view
-      // is: each segment anti-joined against a broadcast of the NEWER
-      // segments' doc_ids — the base streams with zero exchanges, and
-      // the decision data that moves is keys, not payloads (§8's rule).
-      // Oversized deltas (a backfill bigger than the gate) fall back to
-      // the shuffle plan, and the byte-aware auto-compaction on append
-      // (the ANN twin's gate) keeps that regime rare and bounded.
-      def bytes(p: org.apache.hadoop.fs.Path): Long =
-        fs.getContentSummary(p).getLength
-      val deltaBytes = live.tail.map(e => bytes(e._2)).sum
-      val merged =
-        if (deltaBytes <= SigDeltaBcBytes) {
-          val reads = live.map { case (_, p) => s.read.parquet(p.toString) }
-          reads.zipWithIndex.map { case (df, i) =>
-            val newer = reads.drop(i + 1)
-            if (newer.isEmpty) df
-            else df.join(
-              broadcast(newer.map(_.select(col("doc_id"))).reduce(_ union _)),
-              Seq("doc_id"), "left_anti")
-          }.reduce(_ unionByName _)
-        } else {
-          val all = live.map { case (n, p) =>
-            s.read.parquet(p.toString).withColumn("seg", lit(n)) }
-            .reduce(_ unionByName _)
-          val latest = all.groupBy(col("doc_id").as("doc_id_l"))
-            .agg(max(col("seg")).as("seg_l"))
-          all.join(latest,
-            col("doc_id") === col("doc_id_l") && col("seg") === col("seg_l"))
-        }
-      merged.filter(!col("tomb")).select(cols: _*)
-    }
-  }
-
-  /** Byte gate for the anti-join read path above: 64 MB of delta
-    * parquet is ≲1M doc_id keys at the ≥64 B/row the signature schema
-    * floors (8-perm sig array + band/bucket), i.e. a key broadcast
-    * comfortably inside the [[Hints.DimMaxBroadcastRows]] discipline;
-    * beyond it the latest-wins shuffle plan is the honest cost. An
-    * ABSOLUTE bound on purpose — broadcastability is a memory
-    * constraint, it does not scale with the base. */
-  private[graft] val SigDeltaBcBytes: Long = 64L << 20
+      tombstoneIds: Seq[Long] = Nil): Unit =
+    sigStore(s, d).append(minhashBuckets(deltaDocs, SigGram, SigPerms, SigBands),
+      tombstoneIds)
 
   /** Incremental near-dup from STORED state — [[dedupIncr]]'s production
     * form (round-11, VERDICT r10 item 2): the corpus-side signatures are
@@ -977,17 +724,17 @@ object Dedup {
     incrBestMatchSides(s, docs, docs, n, storedCorpusBuckets(s, d))
   }
 
-  /** The stored corpus signature/bucket table for fixture `d` (live
-    * merged view — see [[readSigState]]), renamed to the old-side join
-    * columns. */
+  /** The stored corpus signature/bucket table for fixture `d` (the live
+    * merged view; first touch of a corpus version runs the base build),
+    * renamed to the old-side join columns. */
   private[graft] def storedCorpusBuckets(s: SparkSession, d: String): DataFrame =
-    readSigState(s, d)
+    sigStore(s, d).read()
       .select(col("doc_id").as("old_id"), col("sig").as("osig"),
         col("band_id").as("band_o"), col("bucket").as("bucket_o"))
 
   /** Keep/drop verdicts for ONE delta micro-batch of documents against
     * the STORED corpus signature state — the unit of work the streaming
-    * ingest path ([[graft.streaming.StreamIncrDedup]]) runs per trigger
+    * ingest path ([[graft.streaming.IngestStream]]) runs per trigger
     * via foreachBatch: sign the batch (narrow, O(batch)), bucket-join it
     * against the persisted corpus buckets, exact-verify against the
     * corpus TEXT store, one best-match row per duplicated new doc. The

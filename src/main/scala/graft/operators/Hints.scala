@@ -18,14 +18,15 @@ import graft.Tables
   * (VERDICT r3 flagged Dedup.scala's `broadcast(l)` as the one present
   * scale-unsafe plan).
   *
-  * `hintIfSmall` makes the switch data-driven: the caller passes a MEASURED
-  * row bound (cheap — the state is already checkpointed, so counting it is
-  * a scan of cached blocks, not a recompute) and the hint applies only
-  * under the threshold. Above it the join degrades to the standard shuffled
-  * form — same algebra, no driver-memory cliff. The threshold is rows, not
-  * bytes, because every caller's state row is a fixed narrow shape
-  * (id + label / node + rank), so the row bound translates directly to a
-  * build-side budget — see [[MaxBroadcastRows]] for the sizing rationale.
+  * [[bcOrHash]] makes the switch data-driven: the caller passes a
+  * MEASURED row bound (cheap — a job-free parquet-footer count, or a
+  * scan of already-checkpointed state) and the broadcast hint applies
+  * only under the budget. Above it the side degrades to a SHUFFLE_HASH
+  * build — same algebra, no driver-memory cliff. The budget is rows, not
+  * bytes, because every guarded side is a fixed narrow shape (a
+  * dimension row, id + label, node + rank), so the row bound translates
+  * directly to a build-side budget — see [[MaxBroadcastRows]] and
+  * [[DimMaxBroadcastRows]] for the two tiers.
   *
   * Hints also owns the registry of session-scoped shared leaves: every
   * cached intermediate that queries of one session reuse (the token,
@@ -122,16 +123,10 @@ object Hints {
     }
   }
 
-  /** `broadcast(df)` iff the measured `rows` bound is within `maxRows`;
-    * otherwise `df` unchanged (planner picks the shuffle join). Pass a
-    * cheap UPPER bound (e.g. 2·|pairs| for label-state members) — a bound
-    * that overshoots only costs an unnecessary shuffle, never an OOM. */
-  def hintIfSmall(df: DataFrame, rows: Long,
-      maxRows: Long = MaxBroadcastRows): DataFrame =
-    if (rows >= 0 && rows <= maxRows) broadcast(df) else df
-
-  /** [[hintIfSmall]]'s dimension-join variant: above the budget the side
-    * degrades to a SHUFFLE_HASH hint instead of falling bare — the
+  /** `broadcast(df)` iff the measured `rows` bound is within `maxRows`
+    * (pass a cheap UPPER bound — overshooting only costs a shuffle,
+    * never an OOM). Above the budget the side degrades to a
+    * SHUFFLE_HASH hint instead of falling bare — the
     * bounded dimension stays the hash BUILD side and the fact side
     * streams sort-free, the closest shuffle-plan analogue of the
     * broadcast it replaces (the q_graph_pagerank / q_basket_lift

@@ -505,8 +505,9 @@ object Sim {
 
   /** ANN-state FORMAT version — same contract as Dedup.SigStateVersion:
     * bump on any schema or semantics change so stale cross-session state
-    * is abandoned, never silently reused. */
-  private[graft] val AnnStateVersion = 1
+    * is abandoned, never silently reused. 2: segments carry `tomb`, the
+    * one [[SegmentStore]] format. */
+  private[graft] val AnnStateVersion = 2
   /** Index geometry named once (state key + every build/assign job):
     * 8 seed lists, int8 ×64 quantization — the [[simIvfKmeans]] family's
     * parameters. A retune changes the key and therefore re-indexes. */
@@ -519,111 +520,37 @@ object Sim {
     * best-match distribution (~15% dup at sf0.001, ~16% at sf0.01) so
     * both verdict outcomes stay exercised. */
   private[graft] val AnnDupCos = 0.4
-  /** Max LIVE segments before [[appendAnnState]] folds the state
-    * (write-time compaction, LSM-style read-amplification bound).
-    * Measured on the 100× replica (BASELINE.md round 14, "ANN
-    * multi-segment read path"): the step cost is CROSSING from 1 segment to
-    * any multi-segment state (warm stored search 0.73 s compacted →
-    * 1.26–1.52 s, ≈2×: the latest-wins self-join replaces the plain
-    * clustered scan), while additional bounded deltas are nearly flat
-    * (1k-row segments; the base segment dominates the merge). The
-    * threshold therefore trades the fixed ~3 s compaction job against
-    * restoring the 2× read short-circuit and bounding file-listing/
-    * union growth for corpus-fraction-sized deltas (where per-segment
-    * cost is NOT flat): 4 amortizes one compaction over 4 ingests while
-    * the steady state spends most reads compacted. */
-  private[graft] val AnnCompactSegs = 4
-  /** Byte-ratio leg of the compaction gate (ADVICE r14): a pure count
-    * trigger makes every (AnnCompactSegs+1)-th ingest pay a FULL-CORPUS
-    * rewrite — O(corpus/delta) write amplification on a fixed cadence,
-    * exactly what grows unboundedly at 100 TB where deltas are a
-    * vanishing fraction of the base. Gating the rewrite on accumulated
-    * delta bytes ≥ ratio × base bytes makes the cadence proportional to
-    * corpus size (classic LSM bound: amortized rewrite cost per
-    * ingested byte ≤ 1/ratio ≈ 10×, paid when the merge is worth it) —
-    * justified by that round-14 table itself: read cost is ~FLAT in
-    * segment count for bounded deltas, so deferring the fold costs only
-    * the already-paid 2× multi-segment step, not further growth. */
-  private[graft] val AnnCompactRatio = 0.10
-  /** Hard count cap: bounds file-listing/union width regardless of
-    * bytes, so byte-gated deferral can never unbound the read plan. */
-  private[graft] val AnnCompactMaxSegs = 16
 
-  /** Deterministic location of the stored IVF index for fixture `d`,
-    * keyed exactly like [[Dedup.sigStatePath]]: fixture hash as a
-    * reclaimable prefix, (params, format version, embeddings
-    * fingerprint) folded into the version hash. An unchanged corpus
-    * reuses the index across sessions; anything else gets fresh state
-    * and the superseded sibling is deleted on publish. */
-  def annStatePath(s: SparkSession, d: String): String = {
-    def md5(x: String) = java.security.MessageDigest.getInstance("MD5")
-      .digest(x.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val ver = s"s${AnnSeeds}q64v$AnnStateVersion@" +
-      Tables.pathFingerprint(s, s"$d/embeddings.parquet")
-    s"${sys.props("java.io.tmpdir")}/graft-annstate-${md5(d)}-${md5(ver)}"
-  }
-
-  /** The one-time INDEX BUILD job: k-means-refined centroids
-    * ([[ivfKmCents]] — integer component sums, hash-exact) plus the full
+  /** The stored IVF index of fixture `d` ([[SegmentStore]] kind
+    * `annstate`, keyed on the index geometry, [[AnnStateVersion]] and
+    * the embeddings fingerprint). Its base build is the one-time INDEX
+    * BUILD job: k-means-refined centroids ([[ivfKmCents]] — integer
+    * component sums, hash-exact) under `centroids/`, plus the full
     * corpus assignment as the base segment, clustered by list_id (the
-    * inverted-list layout a probe scans 1/nlist of). Staged + atomic
-    * rename via the Dedup machinery, so readers never see partial state
-    * and racing writers resolve to exactly one winner. At 100 TB this is
+    * inverted-list layout a probe scans 1/nlist of). At 100 TB this is
     * the catalog table an ANN service mounts; it is written once per
     * corpus version, extended by [[appendAnnState]], never per query. */
-  def writeAnnState(s: SparkSession, d: String, path: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val tmp = Dedup.newStagePath(path)
-    ivfKmCents(s, d).write.mode("overwrite").parquet(s"$tmp/centroids")
-    ivfKmAssignK(s, d, 1)
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("list_id"))
-      .repartition(s.sessionState.conf.numShufflePartitions, col("list_id"))
-      .write.mode("overwrite").parquet(s"$tmp/seg=00000")
-    if (Dedup.publishDir(fs, tmp, root)) Dedup.evictStaleSigState(s, d, path)
-  }
-
-  /** Ensure the stored index exists (first touch of a corpus version
-    * builds it) and return its root. */
-  private[graft] def annEnsure(s: SparkSession, d: String): String = {
-    val path = annStatePath(s, d)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (Dedup.sigSegments(fs, root).isEmpty) writeAnnState(s, d, path)
-    path
-  }
+  private[graft] def annStore(s: SparkSession, d: String): SegmentStore =
+    new SegmentStore(s, "annstate", d, s"s${AnnSeeds}q64v$AnnStateVersion",
+        "embeddings", "vec_id", Seq("list_id"),
+        Seq("vec_id", "embedding", "nrm", "list_id")) {
+      protected def build(stage: String, base: String): Unit = {
+        ivfKmCents(s, d).write.mode("overwrite").parquet(s"$stage/centroids")
+        rows(ivfKmAssignK(s, d, 1)
+            .select(col("vec_id"), col("embedding"), col("nrm"), col("list_id")))
+          .write.mode("overwrite").parquet(base)
+      }
+    }
 
   /** Stored refined centroids: (cid, sarr BIGINT[], cc). 8 rows —
     * always broadcast-sized by construction. */
   private[graft] def readAnnCentroids(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${annEnsure(s, d)}/centroids")
+    s.read.parquet(s"${annStore(s, d).ensure()}/centroids")
 
   /** Live merged view of the stored assignments, latest-segment-wins
-    * per vec_id (same read discipline as [[Dedup.readSigState]], minus
-    * tombstones — ANN deltas are new/updated vectors). Single-segment
-    * state (fresh or compacted — the steady state) short-circuits to a
-    * plain clustered scan. */
-  private[graft] def readAnnAssign(s: SparkSession, d: String): DataFrame = {
-    val path = annEnsure(s, d)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val segs = Dedup.sigSegments(fs, root)
-    require(segs.nonEmpty, s"ann-state build failed to publish under $path")
-    val live = segs.drop(segs.lastIndexWhere { case (_, p) =>
-      fs.exists(new org.apache.hadoop.fs.Path(p, "_COMPACT")) } max 0)
-    val cols = Seq(col("vec_id"), col("embedding"), col("nrm"), col("list_id"))
-    if (live.size == 1) s.read.parquet(live.head._2.toString).select(cols: _*)
-    else {
-      val all = live.map { case (n, p) =>
-        s.read.parquet(p.toString).withColumn("seg", lit(n)) }
-        .reduce(_ unionByName _)
-      val latest = all.groupBy(col("vec_id").as("vid_l"))
-        .agg(max(col("seg")).as("seg_l"))
-      all.join(latest,
-          col("vec_id") === col("vid_l") && col("seg") === col("seg_l"))
-        .select(cols: _*)
-    }
-  }
+    * per vec_id. */
+  private[graft] def readAnnAssign(s: SparkSession, d: String): DataFrame =
+    annStore(s, d).read()
 
   /** Assign arbitrary incoming vectors to the STORED centroids, top-k by
     * the index's exact integer-quantized cosine — the incremental-ingest
@@ -656,117 +583,16 @@ object Sim {
   }
 
   /** Ingest one vector delta into the stored index as a new segment —
-    * assignments against the STORED centroids (O(delta)), published by
-    * atomic rename under the next free slot with the same lost-race
-    * retry as [[Dedup.appendSigState]]. Centroids are intentionally NOT
-    * recentered per delta (the standard IVF ingest contract: lists
-    * drift, periodic rebuild re-trains — a retrain writes a new state
-    * version via the params/fingerprint key). */
-  def appendAnnState(s: SparkSession, d: String, deltaVecs: DataFrame): Unit = {
-    val path = annEnsure(s, d)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val seg = annAssignTo(readAnnCentroids(s, d), deltaVecs, 1)
-      .drop("probe_rank")
-      .repartition(s.sessionState.conf.numShufflePartitions, col("list_id"))
-    var attempts = 0
-    var published = false
-    while (!published && attempts < 5) {
-      // Guarded head (ADVICE r13): a concurrent fingerprint-change
-      // reclaim (evictStaleSigState from another session) can empty the
-      // root between annEnsure and here; fail with a diagnosable
-      // message instead of .last's NoSuchElementException.
-      val segs = Dedup.sigSegments(fs, root)
-      require(segs.nonEmpty,
-        s"ann state under $path was reclaimed mid-append (corpus version " +
-          "changed concurrently); re-run the ingest against the new state")
-      val next = segs.last._1 + 1
-      val tmp = Dedup.newStagePath(path)
-      // The stage dir must not leak on a mid-write exception (ADVICE
-      // r13): publishDir renames it away on success, so a surviving tmp
-      // is only ever a failure residue — delete it on the way out.
-      try {
-        seg.write.mode("overwrite").parquet(tmp.toString)
-        published = Dedup.publishDir(fs, tmp,
-          new org.apache.hadoop.fs.Path(root, f"seg=$next%05d"))
-      } finally if (fs.exists(tmp)) fs.delete(tmp, true)
-      attempts += 1
-    }
-    require(published, s"appendAnnState lost $attempts publish races under $path")
-    // Write-time compaction trigger (round 14, VERDICT r13 item 4; gate
-    // reworked round 15 per ADVICE r14): the LSM-style bound is enforced
-    // where the growth happens, at append — but the rewrite is gated on
-    // MERGED BYTES, not a pure count, so a large corpus is not rewritten
-    // on a fixed ingest cadence (see [[AnnCompactRatio]]). Callers on a
-    // latency budget (the streaming ingest path) still see a periodic
-    // spike when the gate opens — bounded to ~1/ratio of bytes ingested.
-    if (annCompactDue(fs, root)) compactAnnState(s, d)
-  }
-
-  /** The compaction decision (ADVICE r14): fold when the live count
-    * exceeds [[AnnCompactSegs]] AND accumulated delta bytes justify a
-    * base rewrite ([[AnnCompactRatio]]) — or unconditionally above the
-    * [[AnnCompactMaxSegs]] listing/union-width cap. The base is the
-    * newest `_COMPACT` segment (or the initial build); everything after
-    * it is delta. */
-  private[graft] def annCompactDue(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      ratio: Double = AnnCompactRatio,
-      maxSegs: Int = AnnCompactMaxSegs): Boolean = {
-    val segs = Dedup.sigSegments(fs, root)
-    val cut = segs.lastIndexWhere { case (_, p) =>
-      fs.exists(new org.apache.hadoop.fs.Path(p, "_COMPACT")) } max 0
-    val live = segs.drop(cut)
-    if (live.size <= AnnCompactSegs) false
-    else if (live.size > maxSegs) true
-    else {
-      def bytes(p: org.apache.hadoop.fs.Path): Long =
-        fs.getContentSummary(p).getLength
-      val base = bytes(live.head._2) max 1L
-      live.tail.map(e => bytes(e._2)).sum >= (ratio * base).toLong
-    }
-  }
-
-  /** Segments a read must merge: everything after the newest `_COMPACT`
-    * marker (the same cut [[readAnnAssign]] applies). */
-  private[graft] def liveAnnSegs(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Int = {
-    val segs = Dedup.sigSegments(fs, root)
-    segs.size - (segs.lastIndexWhere { case (_, p) =>
-      fs.exists(new org.apache.hadoop.fs.Path(p, "_COMPACT")) } max 0)
-  }
-
-  /** Fold live segments into one compacted segment (`_COMPACT` marker,
-    * older segments deleted after publish) — [[Dedup.compactSigState]]'s
-    * contract for the ANN artifact: reads after compaction are
-    * plan-identical to fresh state. */
-  def compactAnnState(s: SparkSession, d: String): Unit = {
-    val path = annEnsure(s, d)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val segs = Dedup.sigSegments(fs, root)
-    if (segs.size <= 1) return
-    val next = segs.last._1 + 1
-    val tmp = Dedup.newStagePath(path)
-    // Stage-dir cleanup on ANY mid-compaction failure (ADVICE r14):
-    // publishDir renames tmp away on success, so a surviving tmp is only
-    // ever failure residue — same try/finally as appendAnnState's.
-    try {
-      readAnnAssign(s, d)
-        .repartition(s.sessionState.conf.numShufflePartitions, col("list_id"))
-        .write.mode("overwrite").parquet(tmp.toString)
-      // Marker through the Hadoop FileSystem API, same FS as the data
-      // (ADVICE r13): the previous java.nio call resolved tmp.toUri.getPath
-      // against the LOCAL filesystem, which silently writes the marker to
-      // the wrong store when the Hadoop FS is non-local — readAnnAssign
-      // would then union pre-compaction segments (correct via latest-wins
-      // but defeating the compaction short-circuit).
-      fs.create(new org.apache.hadoop.fs.Path(tmp, "_COMPACT")).close()
-      if (Dedup.publishDir(fs, tmp,
-          new org.apache.hadoop.fs.Path(root, f"seg=$next%05d")))
-        segs.foreach { case (_, p) => fs.delete(p, true) }
-    } finally if (fs.exists(tmp)) fs.delete(tmp, true)
-  }
+    * assignments against the STORED centroids (O(delta)). Centroids are
+    * intentionally NOT recentered per delta (the standard IVF ingest
+    * contract: lists drift, periodic rebuild re-trains — a retrain
+    * writes a new state version via the params/fingerprint key). The
+    * append's compaction gate means a caller on a latency budget (the
+    * streaming ingest path) still sees a periodic spike, bounded to
+    * ~1/ratio of bytes ingested. */
+  def appendAnnState(s: SparkSession, d: String, deltaVecs: DataFrame): Unit =
+    annStore(s, d).append(
+      annAssignTo(readAnnCentroids(s, d), deltaVecs, 1).drop("probe_rank"))
 
   /** Probe-2 search over the STORED index — [[simIvfKmProbe2]]'s
     * production form (the r12 verdict's "recomputed per query" gap):
@@ -802,7 +628,7 @@ object Sim {
   /** Best stored-index match for one incoming vector batch, with the
     * semantic-dup verdict — the ANN twin of [[Dedup.incrVerdictsFor]]
     * and the per-trigger unit the streaming ingest path
-    * ([[graft.streaming.StreamAnnIngest]]) runs: assign the batch to the
+    * ([[graft.streaming.IngestStream]]) runs: assign the batch to the
     * stored centroids (probe-2), scan only the probed inverted lists,
     * exact cosine, one best-match row per new vector, dup ⇔ cos ≥
     * [[AnnDupCos]]. `candFilter` lets the oracled batch query hold out

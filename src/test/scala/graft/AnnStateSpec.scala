@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Sim
+import graft.operators.{SegmentStore, Sim}
 
 /** Persisted ANN index artifact (round 13, VERDICT r12 item 4):
   * q_sim_ivf_stored reads centroids + inverted-list assignments from a
@@ -28,7 +28,7 @@ class AnnStateSpec extends SparkSpec {
 
   test("index is built once per corpus version and reused across runs") {
     Sim.simIvfStored(spark, sf0001).count()
-    val statePath = Sim.annStatePath(spark, sf0001)
+    val statePath = Sim.annStore(spark, sf0001).path
     val marker = new org.apache.hadoop.fs.Path(statePath + "/seg=00000/_SUCCESS")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.exists(marker), "index build must leave the commit marker")
@@ -47,7 +47,7 @@ class AnnStateSpec extends SparkSpec {
   }
 
   private def segDirs(): Seq[String] = {
-    val root = new java.io.File(Sim.annStatePath(spark, fixture))
+    val root = new java.io.File(Sim.annStore(spark, fixture).path)
     Option(root.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("seg="))
       .map(_.getName).sorted.toSeq
@@ -83,7 +83,7 @@ class AnnStateSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(afterReplay === afterAppend)
     // compaction folds to one live segment, view unchanged
-    Sim.compactAnnState(spark, fixture)
+    Sim.annStore(spark, fixture).compact()
     assert(segDirs().size === 1)
     val afterCompact = Sim.readAnnAssign(spark, fixture)
       .select("vec_id", "list_id").collect()
@@ -94,27 +94,27 @@ class AnnStateSpec extends SparkSpec {
   test("append auto-compacts once the live segment count exceeds the bound") {
     // continues from the compacted single-segment state above (suite
     // order is declaration order). Live counts walk 1→2→3→4 under the
-    // AnnCompactSegs=4 bound — no compaction — and the append that
+    // CompactSegs=4 bound — no compaction — and the append that
     // would reach 5 folds the state back to ONE live segment; the
     // merged view is preserved across the fold (round 14, write-time
     // read-amplification bound).
-    val root = new org.apache.hadoop.fs.Path(Sim.annStatePath(spark, fixture))
+    val root = new org.apache.hadoop.fs.Path(Sim.annStore(spark, fixture).path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(Sim.liveAnnSegs(fs, root) === 1)
+    assert(SegmentStore.live(fs, root).size === 1)
     def delta(i: Int): DataFrame = spark.read
       .parquet(s"$fixture/embeddings.parquet")
       .filter(col("vec_id") < 5)
       .withColumn("vec_id", col("vec_id") + lit(2000000L + i * 100L))
     (1 to 3).foreach { i =>
       Sim.appendAnnState(spark, fixture, delta(i))
-      assert(Sim.liveAnnSegs(fs, root) === 1 + i,
+      assert(SegmentStore.live(fs, root).size === 1 + i,
         s"append $i must not compact under the bound")
     }
     val before = Sim.readAnnAssign(spark, fixture)
       .select("vec_id", "list_id").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     Sim.appendAnnState(spark, fixture, delta(4))
-    assert(Sim.liveAnnSegs(fs, root) === 1,
+    assert(SegmentStore.live(fs, root).size === 1,
       "crossing the bound must fold the state to one live segment")
     val after = Sim.readAnnAssign(spark, fixture)
       .select("vec_id", "list_id").collect()
@@ -139,34 +139,34 @@ class AnnStateSpec extends SparkSpec {
       if (compact)
         fs.create(new org.apache.hadoop.fs.Path(p, "_COMPACT")).close()
     }
-    // count floor: ≤ AnnCompactSegs live segments never folds,
+    // count floor: ≤ CompactSegs live segments never folds,
     // whatever the bytes
     val r1 = mkRoot()
     mkSeg(r1, 0, 100, compact = true)
     (1 to 3).foreach(i => mkSeg(r1, i, 1 << 20))
-    assert(!Sim.annCompactDue(fs, r1),
+    assert(!SegmentStore.compactDue(fs, r1),
       "under the count floor even corpus-sized deltas must not fold")
     // byte leg: 8 tiny deltas over a 1 MB base stay below ratio×base —
     // the pure-count trigger would have rewritten the base at 5
     val r2 = mkRoot()
     mkSeg(r2, 0, 1 << 20, compact = true)
     (1 to 8).foreach(i => mkSeg(r2, i, 100))
-    assert(!Sim.annCompactDue(fs, r2),
+    assert(!SegmentStore.compactDue(fs, r2),
       "tiny deltas over a large base must defer the full rewrite")
     // one ratio-crossing delta opens the gate
     mkSeg(r2, 9, (1 << 20) / 8)
-    assert(Sim.annCompactDue(fs, r2))
+    assert(SegmentStore.compactDue(fs, r2))
     // hard cap: listing/union width alone forces the fold
     val r3 = mkRoot()
     mkSeg(r3, 0, 1 << 20, compact = true)
-    (1 to Sim.AnnCompactMaxSegs).foreach(i => mkSeg(r3, i, 100))
-    assert(Sim.annCompactDue(fs, r3),
+    (1 to SegmentStore.CompactMaxSegs).foreach(i => mkSeg(r3, i, 100))
+    assert(SegmentStore.compactDue(fs, r3),
       "the hard count cap must fold regardless of delta bytes")
   }
 
   test("superseded state is reclaimed when the corpus fingerprint changes") {
     Sim.readAnnAssign(spark, fixture).count()
-    val oldPath = Sim.annStatePath(spark, fixture)
+    val oldPath = Sim.annStore(spark, fixture).path
     assert(new java.io.File(oldPath).isDirectory)
     // regenerate the fixture → new fingerprint → new key; the next build
     // must delete the dead sibling
@@ -174,7 +174,7 @@ class AnnStateSpec extends SparkSpec {
     spark.read.parquet(s"$sf0001/embeddings.parquet")
       .repartition(3)
       .write.mode("overwrite").parquet(s"$fixture/embeddings.parquet")
-    val newPath = Sim.annStatePath(spark, fixture)
+    val newPath = Sim.annStore(spark, fixture).path
     assert(newPath !== oldPath, "fingerprint change must change the key")
     Sim.readAnnAssign(spark, fixture).count()
     assert(new java.io.File(newPath).isDirectory)

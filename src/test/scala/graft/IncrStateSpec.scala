@@ -42,7 +42,7 @@ class IncrStateSpec extends SparkSpec {
 
   test("state is written once per corpus version and reused across runs") {
     Dedup.dedupIncrStored(spark, fixtureFull).count()
-    val statePath = Dedup.sigStatePath(spark, fixtureFull)
+    val statePath = Dedup.sigStore(spark, fixtureFull).path
     val marker = new org.apache.hadoop.fs.Path(statePath + "/seg=00000/_SUCCESS")
     val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.exists(marker), "ingest job must leave the commit marker")
@@ -58,8 +58,8 @@ class IncrStateSpec extends SparkSpec {
     val out = Dedup.dedupIncrStored(spark, fixtureNoDelta)
     assert(out.count() === 0L,
       "with the delta deleted there is nothing to match")
-    val before = rows(spark.read.parquet(Dedup.sigStatePath(spark, fixtureFull)))
-    val after = rows(spark.read.parquet(Dedup.sigStatePath(spark, fixtureNoDelta)))
+    val before = rows(spark.read.parquet(Dedup.sigStore(spark, fixtureFull).path))
+    val after = rows(spark.read.parquet(Dedup.sigStore(spark, fixtureNoDelta).path))
     assert(before.nonEmpty)
     assert(after === before,
       "corpus signature state must be a pure function of the corpus side")
@@ -71,7 +71,7 @@ class IncrStateSpec extends SparkSpec {
     spark.read.parquet(s"$d/documents.parquet")
 
   private def segDirsOf(d: String): Seq[String] = {
-    val root = new java.io.File(Dedup.sigStatePath(spark, d))
+    val root = new java.io.File(Dedup.sigStore(spark, d).path)
     Option(root.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("seg="))
       .map(_.getName).sorted.toSeq
@@ -113,13 +113,13 @@ class IncrStateSpec extends SparkSpec {
     // Phase 3 — compaction folds the 3 segments (+1 compacted) into one
     // live segment, deletes the dead ones, and changes NO verdict.
     assert(segDirsOf(d).size === 3)
-    Dedup.compactSigState(spark, d)
+    Dedup.sigStore(spark, d).compact()
     assert(segDirsOf(d) === Seq("seg=00003"),
       "compaction must leave exactly the one compacted segment")
     assert(rows(Dedup.incrVerdictsFor(spark, d, delta)) === base,
       "compaction must not change any verdict")
     // idempotence: compacting a single-segment state is a no-op
-    Dedup.compactSigState(spark, d)
+    Dedup.sigStore(spark, d).compact()
     assert(segDirsOf(d) === Seq("seg=00003"))
   }
 
@@ -129,13 +129,13 @@ class IncrStateSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val d = dir.toString
     Dedup.dedupIncrStored(spark, d).count()
-    val p1 = Dedup.sigStatePath(spark, d)
+    val p1 = Dedup.sigStore(spark, d).path
     assert(new java.io.File(p1).exists())
     // regenerate in place with a different file layout → new fingerprint
     docsOf(fixtureFull).repartition(3)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     Dedup.dedupIncrStored(spark, d).count()
-    val p2 = Dedup.sigStatePath(spark, d)
+    val p2 = Dedup.sigStore(spark, d).path
     assert(p2 !== p1, "a regenerated fixture must key fresh state")
     assert(!new java.io.File(p1).exists(),
       "the superseded state dir must be reclaimed, not leaked")

@@ -488,30 +488,6 @@ class PlanQualitySpec extends SparkSpec {
       s"delta dedup must stay an equi-join on (band, bucket):\n$p")
   }
 
-  test("hintIfSmall broadcasts under the row threshold and shuffles above it") {
-    import graft.operators.Hints
-    // Auto-broadcast off: both join inputs here are tiny, so the planner
-    // would broadcast the probe side on its own statistics and mask what
-    // this test isolates — that the HINT alone decides the strategy, as it
-    // does for the iterative operators' statistics-less checkpointed state.
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.get(key)
-    try {
-      spark.conf.set(key, "-1")
-      val a = spark.range(1000).toDF("id")
-      val state = spark.range(100).toDF("id").localCheckpoint(true)
-      val hinted = a.join(Hints.hintIfSmall(state, rows = 100), "id")
-      assert(hinted.queryExecution.sparkPlan.toString.contains("BroadcastHashJoin"),
-        s"under-threshold state lost its broadcast:\n${hinted.queryExecution.sparkPlan}")
-      val unhinted = a.join(Hints.hintIfSmall(state, rows = 100, maxRows = 99), "id")
-      val p = unhinted.queryExecution.sparkPlan.toString
-      assert(!p.contains("BroadcastHashJoin") && !p.contains("BroadcastExchange"),
-        s"over-threshold state must shuffle-join (static plan):\n$p")
-      assert(hinted.collect().map(_.getLong(0)).sorted.toSeq ==
-        unhinted.collect().map(_.getLong(0)).sorted.toSeq)
-    } finally spark.conf.set(key, prev)
-  }
-
   test("bcOrHash broadcasts under the dim budget and shuffle-hash-joins above it") {
     import graft.operators.Hints
     // The round-10 dimension-broadcast guard: under DimMaxBroadcastRows
@@ -542,7 +518,7 @@ class PlanQualitySpec extends SparkSpec {
     // Round-9 verdict item 1: the three link-prediction queries hinted
     // their probe-slice degree tables broadcast UNCONDITIONALLY — the
     // round-7 PageRank OOM class (data-derived build side, no size
-    // guard). They now ride Hints.hintIfSmall with a footer-derived
+    // guard). They now ride Hints.bcOrHash with a footer-derived
     // bound; this pin drives the maxBc escape hatch to 0 and asserts
     // (a) the guarded plan broadcasts NOTHING once the budget is
     // exceeded — the exact degradation a 10⁹-customer corpus needs —

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.col
 
 import graft.operators.Sim
-import graft.streaming.StreamAnnIngest
+import graft.streaming.IngestStream
 
 /** Streaming semantic-dedup-at-ingest (round 13, VERDICT r12 item 7):
   * delta vectors arrive as a file stream in multiple micro-batches, each
@@ -30,8 +30,10 @@ class StreamAnnIngestSpec extends SparkSpec {
       .filter("vec_id % 10 = 7 AND vec_id < 1000")
       .repartition(2)
       .write.mode("overwrite").parquet(stage.toString)
-    val nBatches = StreamAnnIngest.run(spark, sf0001, stage.toString,
-      ckpt.toString, sink.toString, col("c_id") % 10 =!= 7)
+    val schema = Tables.embeddings(spark, sf0001).schema
+    val nBatches = IngestStream.run(spark, schema, stage.toString,
+      ckpt.toString, sink.toString)(
+      Sim.annIngestVerdicts(spark, sf0001, _, col("c_id") % 10 =!= 7))
     assert(nBatches >= 2, s"expected a multi-batch run, got $nBatches")
     val streamed = rows(spark.read.parquet(sink.toString)
       .select("new_id", "match_id", "cos_sim", "dup"))
@@ -46,8 +48,9 @@ class StreamAnnIngestSpec extends SparkSpec {
       s"fixture should exercise both dup outcomes, saw $dups")
     // Replay: same checkpoint, nothing new staged.
     val sinkFiles = java.nio.file.Files.walk(sink).toArray.map(_.toString).sorted
-    val again = StreamAnnIngest.run(spark, sf0001, stage.toString,
-      ckpt.toString, sink.toString, col("c_id") % 10 =!= 7)
+    val again = IngestStream.run(spark, schema, stage.toString,
+      ckpt.toString, sink.toString)(
+      Sim.annIngestVerdicts(spark, sf0001, _, col("c_id") % 10 =!= 7))
     assert(again === 0L, "restart over a drained checkpoint must process 0 batches")
     val sinkAfter = java.nio.file.Files.walk(sink).toArray.map(_.toString).sorted
     assert(sinkAfter === sinkFiles, "replay must leave the sink untouched")

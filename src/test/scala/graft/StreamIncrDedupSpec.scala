@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.Row
 
 import graft.operators.Dedup
-import graft.streaming.StreamIncrDedup
+import graft.streaming.IngestStream
 
 /** Streaming delta-ingest dedup (round 11): delta documents arrive as a
   * file stream in MULTIPLE micro-batches, each signed in-stream and
@@ -29,9 +29,10 @@ class StreamIncrDedupSpec extends SparkSpec {
       .filter("doc_id % 10 = 7")
       .repartition(2)
       .write.mode("overwrite").parquet(stage.toString)
+    val schema = Tables.documents(spark, sf0001).schema
     val nBatches =
-      StreamIncrDedup.run(spark, sf0001, stage.toString, ckpt.toString,
-        sink.toString)
+      IngestStream.run(spark, schema, stage.toString, ckpt.toString,
+        sink.toString)(Dedup.incrVerdictsFor(spark, sf0001, _))
     assert(nBatches >= 2, s"expected a multi-batch run, got $nBatches")
     val streamed = rows(spark.read.parquet(sink.toString)
       .drop("batch")
@@ -44,8 +45,8 @@ class StreamIncrDedupSpec extends SparkSpec {
     // the sink is untouched.
     val sinkFiles = java.nio.file.Files.walk(sink).toArray.map(_.toString).sorted
     val again =
-      StreamIncrDedup.run(spark, sf0001, stage.toString, ckpt.toString,
-        sink.toString)
+      IngestStream.run(spark, schema, stage.toString, ckpt.toString,
+        sink.toString)(Dedup.incrVerdictsFor(spark, sf0001, _))
     assert(again === 0L, "restart over a drained checkpoint must process 0 batches")
     val sinkAfter = java.nio.file.Files.walk(sink).toArray.map(_.toString).sorted
     assert(sinkAfter === sinkFiles, "replay must leave the sink untouched")
